@@ -1,7 +1,9 @@
 """Aggregates every query family into the single registry that
 ``__spark_entry__`` exposes to the driver.
 
-Import order is load order; name collisions are a bug and raise.
+Import order is load order; name collisions are a bug and raise, and so
+does a family module that fails to import (its queries are never silently
+dropped).
 """
 
 from __future__ import annotations
@@ -35,11 +37,8 @@ for _mod in ("operators.dedup", "operators.similarity", "operators.text",
              "plans.star_schema", "plans.analytics", "plans.tpch", "plans.scd",
              "streaming.windows", "streaming.stateful",
              "functions.tablefuncs"):
-    try:
-        _m = __import__(f"etl_globalretail_spark.{_mod}", fromlist=["QUERIES", "ORACLE"])
-        _merge(_m.QUERIES, _m.ORACLE)
-    except ImportError:
-        pass  # family not built yet (round-incremental)
+    _m = __import__(f"etl_globalretail_spark.{_mod}", fromlist=["QUERIES", "ORACLE"])
+    _merge(_m.QUERIES, _m.ORACLE)
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,14 @@ Two schema families:
 
 - TESTDATA_SCHEMAS — the driver's TPC-H-ish parquet tables plus the
   training-data tables (documents, embeddings) and the events stream table.
+  This is the read contract: ``readers.load_table`` and
+  ``windows.read_event_stream`` read every file with it instead of letting
+  Spark infer a schema, and a file whose footer stores a column as another
+  type is refused with ``ValueError``. The one thing taken from the footer
+  is each timestamp column's type: TIMESTAMP where the footer marks the
+  column isAdjustedToUTC (or stores INT96), TIMESTAMP_NTZ where it does not
+  (the test data's ``o_orderdate``/``l_shipdate``), and events ``ts`` read
+  as raw ``long`` nanos when stored as TIMESTAMP(NANOS).
 - star-schema StructTypes for the warehouse the engine builds
   (dims + fact; cf. /root/reference/sql/cria_dw.sql:9-145).
 """

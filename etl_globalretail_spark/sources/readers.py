@@ -21,8 +21,11 @@ from __future__ import annotations
 import os
 import weakref
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from etl_globalretail_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from etl_globalretail_spark.sources.artifacts import materialize
@@ -32,41 +35,47 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Analyzed-plan cache: (sf_dir, table) → DataFrame, scoped per SparkSession
 # (weak key — a stopped session's entries vanish with it). DataFrames are
 # immutable logical plans, so handing the same object to every caller is
-# safe; what this saves is the ~200 ms of driver-side analysis
-# (file listing + footer schema read) that `spark.read.parquet` pays on
-# EVERY call — load_table runs 1–6× per query and the driver runs 90+
-# queries per session, so re-analysis was multiple seconds of pure driver
-# latency per round. Executor-side work is unaffected (nothing is
+# safe; what this saves is the driver-side file listing and plan analysis
+# of a declared-schema read (~15 ms per table on local files). load_table
+# runs 1–6× per query, so a session that repeats queries over one sf_dir
+# pays it once per table. Executor-side work is unaffected (nothing is
 # persisted; each action still scans parquet).
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 def table_rows(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
-    """Memoized row count of one testdata table (parquet footer counts —
-    one cheap metadata job per (session, table, sf_dir), then cached).
-    Used to size data-dependent knobs (e.g. streaming state partitions)
-    without repaying the count per query."""
+    """Memoized row count of one testdata table, summed from its parquet
+    footers (no Spark job). Used to size data-dependent knobs (e.g.
+    streaming state partitions) without repaying the count per query.
+    Paths pyarrow cannot open fall back to a counting job."""
     cache = _PLAN_CACHE.setdefault(spark, {})
     key = ("__rows__", sf_dir, name)
     if key not in cache:
-        cache[key] = load_table(spark, name, sf_dir).count()
+        try:
+            cache[key] = parquet_footer(f"{sf_dir}/{name}.parquet")[1]
+        except (OSError, pa.ArrowException):
+            cache[key] = load_table(spark, name, sf_dir).count()
     return cache[key]
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Scan one testdata table.
 
-    Columns are selected in canonical schema order so downstream code and the
+    The scan is read with the schema ``read_schema`` derives from the
+    declaration and the parquet footer, so it costs no Spark job; only
+    paths it cannot use (see there) pay Spark's schema-inference job.
+    Columns come out in canonical schema order so downstream code and the
     oracle agree on column order; Catalyst still prunes unused ones at the
     physical scan.
 
     The events table has shipped ``ts`` both as parquet TIMESTAMP(NANOS)
-    (no native Spark type — read as raw nanos via legacy long mode and
-    truncate to µs, matching DuckDB's ns→µs coercion) and as plain
-    TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ under Spark's NTZ inference).
-    Normalize either encoding to a session-UTC microsecond TimestampType so
+    (no native Spark type — read as raw nanos and truncated to µs, matching
+    DuckDB's ns→µs coercion) and as plain TIMESTAMP(MICROS). Either
+    encoding is normalized to a session-UTC microsecond TimestampType so
     every downstream ``unix_micros``/window expression sees one type.
     """
     if name not in TESTDATA_SCHEMAS:
@@ -75,21 +84,126 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     cached = per_session.get((sf_dir, name))
     if cached is not None:
         return cached
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = df.schema["ts"].dataType.simpleString()
-        if ts_type in ("long", "bigint"):  # TIMESTAMP(NANOS) read as raw nanos
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:  # timestamp_ntz or timestamp — value-preserving under UTC session tz
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    path = f"{sf_dir}/{name}.parquet"
+    schema = read_schema(spark, name, path)
+    if schema is None:
+        df = infer_read(spark, name, path)
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    df = df.select(*[f.name for f in TESTDATA_SCHEMAS[name].fields])
+        df = spark.read.schema(schema).parquet(path)
+    df = df.select(*TESTDATA_SCHEMAS[name].fieldNames())
+    if name == "events":
+        df = event_ts_micros(df, (schema or df.schema)["ts"].dataType)
     if name not in _SPREAD_EXEMPT:
-        df = _spread(spark, df, f"{sf_dir}/{name}.parquet")
+        df = _spread(spark, df, path)
     per_session[(sf_dir, name)] = df
     return df
+
+
+def parquet_footer(path: str) -> tuple[pa.Schema, int]:
+    """Arrow schema and row count of a parquet table, from its footers.
+
+    ``path`` is one file or a directory of part files (walked as Spark
+    lists it: names starting with ``_`` or ``.`` are skipped). The schema
+    is the first part file's; the count sums every file's footer. INT96
+    columns come back as ``timestamp[us, tz=UTC]``: they hold instants and
+    Spark reads them as TIMESTAMP, while pyarrow would type them zone-less
+    nanoseconds, the same as TIMESTAMP(NANOS). Raises ``OSError`` (or a
+    pyarrow error) when pyarrow cannot open the path or finds no file.
+    """
+    import pyarrow.parquet as pq
+
+    files = []
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+            files += [os.path.join(root, f) for f in sorted(names)
+                      if f.endswith(".parquet") and f[0] not in "_."]
+    if not files:
+        raise FileNotFoundError(f"no parquet file at {path}")
+    metas = [pq.read_metadata(f) for f in files]
+    schema = metas[0].schema.to_arrow_schema()
+    for i in range(len(metas[0].schema)):
+        col = metas[0].schema.column(i)
+        if col.physical_type == "INT96" and col.path in schema.names:
+            idx = schema.get_field_index(col.path)
+            schema = schema.set(idx, schema.field(idx).with_type(pa.timestamp("us", "UTC")))
+    return schema, sum(m.num_rows for m in metas)
+
+
+def read_schema(spark: SparkSession, name: str, path: str) -> T.StructType | None:
+    """The schema to read testdata table ``name`` at ``path`` with.
+
+    It is ``TESTDATA_SCHEMAS[name]`` with the footer deciding each
+    timestamp column's type, so the result is what Spark's inference
+    gives: TIMESTAMP when the footer marks the column isAdjustedToUTC (or
+    stores INT96), TIMESTAMP_NTZ when it does not. Events ``ts`` stored as
+    TIMESTAMP(NANOS) is declared ``long``, and only then is Spark's
+    nanos-as-long conf set on the session. Any other column whose footer
+    type differs from the declaration raises ``ValueError``.
+
+    Returns ``None`` when pyarrow cannot open the path, or when a declared
+    column is not in the footer (a partition column held in the directory
+    names, or a missing one); the caller then infers the schema as Spark
+    does, which resolves the former and fails loudly on the latter.
+    """
+    try:
+        footer = {f.name: f.type for f in parquet_footer(path)[0]}
+    except (OSError, pa.ArrowException):
+        return None
+    fields, nanos = [], False
+    for field in TESTDATA_SCHEMAS[name].fields:
+        stored = footer.get(field.name)
+        if stored is None:
+            return None
+        actual = _spark_type(stored)
+        if (name, field.name) == ("events", "ts") and pa.types.is_timestamp(stored) \
+                and stored.unit == "ns":
+            nanos, actual = True, T.LongType()
+        elif not (isinstance(field.dataType, T.TimestampType)
+                  and isinstance(actual, T.TimestampNTZType)):
+            found = actual.simpleString() if actual else str(stored)
+            if found != field.dataType.simpleString():
+                raise ValueError(
+                    f"table {name!r} at {path}: column {field.name!r} is {found} "
+                    f"in the parquet footer but declared {field.dataType.simpleString()}"
+                )
+        fields.append(T.StructField(field.name, actual))
+    if nanos:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return T.StructType(fields)
+
+
+def _spark_type(stored: pa.DataType) -> T.DataType | None:
+    """The Spark type a parquet column of arrow type ``stored`` reads as,
+    or ``None`` if it has none (TIMESTAMP(NANOS), unsigned integers)."""
+    if pa.types.is_timestamp(stored):
+        if stored.unit == "ns":
+            return None
+        return T.TimestampType() if stored.tz else T.TimestampNTZType()
+    try:
+        return from_arrow_type(stored)
+    except TypeError:
+        return None
+
+
+def infer_read(spark: SparkSession, name: str, path: str) -> DataFrame:
+    """Spark's schema-inference read (one job), for paths ``read_schema``
+    cannot use. Events may be TIMESTAMP(NANOS), which inference rejects
+    unless nanos are read as longs."""
+    if name == "events":
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return spark.read.parquet(path)
+
+
+def event_ts_micros(df: DataFrame, ts_type: T.DataType) -> DataFrame:
+    """Normalize events ``ts`` read as ``ts_type`` to a microsecond
+    TIMESTAMP: raw TIMESTAMP(NANOS) longs are truncated to µs, and NTZ
+    values are cast (value-preserving under the UTC session time zone)."""
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 # Broadcast-bound micro-dimensions (≤25 rows): fanning them out just inserts
@@ -116,15 +230,7 @@ def _spread(spark: SparkSession, df: DataFrame, path: str | None = None) -> Data
     (load_table runs 1–6× per query; across the bench that probe alone
     was seconds of driver time). Non-local paths fall back to the probe.
     """
-    if os.environ.get('SPREAD_MODE')=='off':
-        return df
     want = spark.sparkContext.defaultParallelism
-    if os.environ.get('SPREAD_MODE')=='data':
-        try:
-            sz = os.path.getsize(path) if path else 0
-        except OSError:
-            sz = 0
-        want = max(1, min(want, sz // int(os.environ.get('SPREAD_BPT','65536'))))
     splits: int | None = None
     if path is not None:
         try:
@@ -337,20 +443,8 @@ def fast_count(sf_dir: str, table: str) -> int:
     read. COUNT(*) with no filter is answerable from file statistics;
     engines with metadata-only optimizations (and table formats with
     manifest counts) do exactly this. At 100 TB the difference is a
-    footer listing versus a full scan. Falls back transparently to the
-    per-file footer walk for multi-file tables; correctness is pinned
-    against the scan-based count in pytest.
+    footer listing versus a full scan. Multi-file tables sum their part
+    files' footers (``parquet_footer``); correctness is pinned against the
+    scan-based count in pytest.
     """
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+    return parquet_footer(os.path.join(sf_dir, f"{table}.parquet"))[1]

@@ -105,24 +105,17 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     single ``events.parquet`` file, so point the stream at the parent
     directory with a pathGlobFilter selecting just that file.
 
-    The testdata has stored ts as parquet TIMESTAMP(NANOS) (no native Spark
-    type: declare LongType under the nanos-as-long legacy conf and truncate)
-    and as TIMESTAMP(MICROS). FileStreamSource needs a fixed schema up
-    front, so probe the actual footer type with a zero-cost batch schema
-    read and declare the matching stream schema — the same normalization
-    the batch reader does.
+    The testdata has stored ts as parquet TIMESTAMP(NANOS) and as
+    TIMESTAMP(MICROS). FileStreamSource needs a fixed schema up front, so
+    take it from the parquet footer (``readers.read_schema``: no Spark job,
+    ``ts`` declared ``long`` for nanos) and apply the same normalization
+    the batch reader does. A path whose footer pyarrow cannot read (e.g. a
+    directory no file has arrived in yet) falls back to Spark's inference.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probed = spark.read.parquet(path).schema["ts"].dataType.simpleString()
-    nanos = probed in ("long", "bigint")
-    base = TESTDATA_SCHEMAS["events"]
-    fields = [
-        f"{f.name} {'LONG' if nanos else probed.upper()}"
-        if f.name == "ts"
-        else f"{f.name} {f.dataType.simpleString()}"
-        for f in base.fields
-    ]
-    reader = spark.readStream.schema(", ".join(fields)).format("parquet")
+    schema = read_schema(spark, "events", path) or infer_read(
+        spark, "events", path
+    ).select(*TESTDATA_SCHEMAS["events"].fieldNames()).schema
+    reader = spark.readStream.schema(schema).format("parquet")
     # Two on-disk layouts: the testdata ships events.parquet as a SINGLE
     # FILE (stream the parent dir with a glob selecting it — a file is
     # not a valid FileStreamSource basePath), while Spark-written tables
@@ -136,10 +129,7 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
         parent, _, fname = path.rpartition("/")
         reader = reader.option("pathGlobFilter", fname)
         path = parent
-    raw = reader.load(path)
-    if nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return event_ts_micros(reader.load(path), schema["ts"].dataType)
 
 
 def dedup_stream(
@@ -229,7 +219,13 @@ from etl_globalretail_spark.plans.queries import (  # noqa: E402
     dsum,
     make_query_decorator,
 )
-from etl_globalretail_spark.sources.readers import load_table, table_rows  # noqa: E402
+from etl_globalretail_spark.sources.readers import (  # noqa: E402
+    event_ts_micros,
+    infer_read,
+    load_table,
+    read_schema,
+    table_rows,
+)
 
 QUERIES: dict[str, Callable] = {}
 ORACLE: dict[str, str] = {}
