@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
+from etl_globalretail_spark.sources.artifacts import session_artifact
 from etl_globalretail_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -839,22 +840,17 @@ def _pq_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select("vec_id", _qvec(F.col("embedding")).alias("qv"))
 
 
-_PQ_MEMO_ATTR = "_etl_globalretail_pq_memo"
-
-
 def pq_fit(spark: SparkSession, sf_dir: str) -> dict[int, dict[int, list[int]]]:
     """Fit the M per-subspace codebooks (the _PQ_ITERS-1 update rounds of
     the q295 contract) and return centroids[m][code] — session-memoized
     per corpus (the q154 edge-memo stance): q295's audit and q297's ADC
     search share one fit, as a real index build would."""
+    return session_artifact(spark, "pq_fit", sf_dir, lambda: _pq_fit(spark, sf_dir))
+
+
+def _pq_fit(spark: SparkSession, sf_dir: str) -> dict[int, dict[int, list[int]]]:
     import math
 
-    memo = getattr(spark, _PQ_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _PQ_MEMO_ATTR, memo)
-    if sf_dir in memo:
-        return memo[sf_dir]
     base = _pq_base(spark, sf_dir).persist()
     try:
         seeds = (
@@ -883,7 +879,6 @@ def pq_fit(spark: SparkSession, sf_dir: str) -> dict[int, dict[int, list[int]]]:
             }
     finally:
         base.unpersist()
-    memo[sf_dir] = cents
     return cents
 
 

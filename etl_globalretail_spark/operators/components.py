@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.artifacts import materialize, reliable_enabled
+from etl_globalretail_spark.sources.artifacts import (
+    checkpoint_rdds,
+    materialize,
+    session_artifact,
+)
 from etl_globalretail_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -67,28 +71,11 @@ def connected_components(
     FINAL round's blocks (which the returned frame reads) are appended to
     ``materialized`` for the caller to release after consumption.
     """
-    sc = pairs.sparkSession.sparkContext
-
-    def _checkpoint(df: DataFrame, eager: bool = True):
-        """Materialize one round + handles of any java RDD blocks pinned.
-
-        Local tier: localCheckpoint pins executor blocks — capture their
-        handles so superseded rounds can be released (the mark registers
-        the blocks immediately even under ``eager=False``; the caller's
-        first full action materializes them). Reliable tier
-        (SPARK_GRAFT_RELIABLE_ARTIFACTS=1): rounds go to the checkpoint
-        dir as files; nothing is pinned, so there is nothing to release
-        (the dir is session-scoped).
-        """
-        if reliable_enabled():
-            return materialize(df, eager=eager), []
-        pre = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        out = df.localCheckpoint(eager=eager)
-        post = sc._jsc.getPersistentRDDs()
-        handles = [
-            post.get(i) for i in set(post.keySet().toArray()) - pre
-        ]
-        return out, handles
+    def _checkpoint(df: DataFrame):
+        """Materialize one round; return it with the JVM RDDs holding its
+        blocks, so a superseded round can be released."""
+        out = materialize(df)
+        return out, checkpoint_rdds(out)
 
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -547,9 +534,6 @@ def _q191_oracle() -> str:
     """
 
 
-_ER_MEMO_ATTR = "_etl_globalretail_er_memo"
-
-
 def er_customer_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vertex, component) closure labels over the blocked fuzzy customer
     pair graph (q80's matcher, Levenshtein ≤ 2 inside nation+length
@@ -560,31 +544,29 @@ def er_customer_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsequent consumer pays |matched vertices|-sized work only.
 
     The artifact is a ``materialize()`` (localCheckpoint) frame: label
-    rows live in executor block storage, lineage back through the
-    closure rounds and the blocked self-join is truncated, and blocks
-    are released with the session by the ContextCleaner. The closure's
-    own per-round blocks are released here once the final artifact is
-    materialized — the memo supersedes the caller-release contract. The
-    memo lives on the SparkSession object (not a module dict keyed by
-    ``id(spark)``), so a GC'd session can never alias a stale artifact.
+    rows live in executor block storage, and lineage back through the
+    closure rounds and the blocked self-join is truncated.
+    ``artifacts.session_artifact`` holds it: a rewritten ``customer``
+    file rebuilds it, and its blocks are freed when its directory is
+    evicted from the store. The closure's own per-round blocks are
+    released here once the final artifact is materialized — the session
+    artifact supersedes the caller-release contract.
     """
     from etl_globalretail_spark.operators.dedup import fuzzy_pairs
 
-    memo = getattr(spark, _ER_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _ER_MEMO_ATTR, memo)
-    if sf_dir not in memo:
+    def build() -> DataFrame:
         c = load_table(spark, "customer", sf_dir)
         pairs = fuzzy_pairs(
             c, "c_custkey", "c_name", ["c_nationkey"], max_distance=2
         )
         held: list = []
         cc = connected_components(pairs, materialized=held)
-        memo[sf_dir] = materialize(cc)
+        out = materialize(cc)
         for h in held:
             h.unpersist(False)
-    return memo[sf_dir]
+        return out
+
+    return session_artifact(spark, "er_customer_labels", sf_dir, build)
 
 
 def _register_q191() -> None:

@@ -32,8 +32,8 @@ from pyspark.sql.window import Window
 
 from etl_globalretail_spark.operators.text import _sql_tokens, tokens
 from etl_globalretail_spark.plans.queries import make_query_decorator
+from etl_globalretail_spark.sources.artifacts import materialize, session_artifact
 from etl_globalretail_spark.sources.readers import load_table
-from etl_globalretail_spark.sources.artifacts import materialize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -913,9 +913,6 @@ _Q66_BAND_SELECTS = "\n        UNION ALL\n".join(
 )
 
 
-_Q66_MEMO: dict[tuple[int, str], list] = {}
-
-
 @_register(
     "q66_minhash_pairs_exact",
     oracle=f"""
@@ -976,11 +973,13 @@ def q66_minhash_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q137 keeper dedup) pay the shingle/signature pipeline once per
     # session instead of once per query (~3 s each at sf0.1) — the same
     # persisted-artifact stance q132 takes for the LSH index.
-    memo_key = (id(spark), sf_dir)
-    if memo_key in _Q66_MEMO:
-        return spark.createDataFrame(
-            _Q66_MEMO[memo_key], "id_a long, id_b long, jaccard double"
-        )
+    rows = session_artifact(
+        spark, "q66_pairs", sf_dir, lambda: _q66_pair_rows(spark, sf_dir)
+    )
+    return spark.createDataFrame(rows, "id_a long, id_b long, jaccard double")
+
+
+def _q66_pair_rows(spark: SparkSession, sf_dir: str) -> list:
     d = load_table(spark, "documents", sf_dir)
     hs = F.array_distinct(
         F.transform(
@@ -1040,11 +1039,9 @@ def q66_minhash_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b", "jaccard")
     )
     try:
-        rows = verified.collect()  # |verified pairs| — small by construction
+        return verified.collect()  # |verified pairs| — small by construction
     finally:
         base.unpersist()
-    _Q66_MEMO[memo_key] = rows
-    return spark.createDataFrame(rows, "id_a long, id_b long, jaccard double")
 
 
 @_register(
@@ -1369,24 +1366,16 @@ def q80_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_pairs(c, "c_custkey", "c_name", ["c_nationkey"], 2)
 
 
-_FUZZY_MEMO_ATTR = "_etl_globalretail_fuzzy_pairs_memo"
-
-
 def fuzzy_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q80's blocked Levenshtein pair graph as a session-memoized
     executor-resident artifact (the lp_labels device one family over):
     q338's mutual-best matching and q339's Luby MIS both consume the
     identical pair build — pay the blocked fuzzy join once per
     (session, corpus) instead of once per consumer."""
-    memo = getattr(spark, _FUZZY_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _FUZZY_MEMO_ATTR, memo)
-    if sf_dir not in memo:
-        memo[sf_dir] = materialize(
-            QUERIES["q80_fuzzy_name_pairs"](spark, sf_dir)
-        )
-    return memo[sf_dir]
+    return session_artifact(
+        spark, "fuzzy_pair_edges", sf_dir,
+        lambda: materialize(QUERIES["q80_fuzzy_name_pairs"](spark, sf_dir)),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1949,10 +1938,10 @@ def _register_q207() -> None:
             )
         )
         # Executor-resident materialization: base feeds the prefix index,
-        # the full index, and both verify sides — checkpoint once; blocks
-        # are freed by the ContextCleaner when the frame is dropped. The
+        # the full index, and both verify sides — checkpoint once. The
         # pair set is returned LAZY (it is data-sized; a driver collect
-        # here would bottleneck at scale).
+        # here would bottleneck at scale) and reads these blocks, so they
+        # stay for the session: dropping the frame does not free them.
         base = d.select(F.col("doc_id").alias("doc"), hs.alias("hs")).filter(
             F.size("hs") > 0
         ).transform(materialize)

@@ -31,7 +31,7 @@ from etl_globalretail_spark.plans.queries import (
     make_query_decorator,
     _osum,
 )
-from etl_globalretail_spark.sources.artifacts import materialize
+from etl_globalretail_spark.sources.artifacts import materialize, session_artifact
 from etl_globalretail_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1573,7 +1573,6 @@ def q138_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from etl_globalretail_spark.sources.formats import morton_key, morton_sql  # noqa: E402
-from etl_globalretail_spark.sources.artifacts import materialize
 
 _Z_BUCKETS = 16
 
@@ -1993,33 +1992,25 @@ def _q154_edges_sql() -> str:
 
 
 
-_EDGE_MEMO_ATTR = "_etl_globalretail_edge_memo"
-
-
 def co_purchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Support≥2 co-purchase edge list (u < v, support) as a
-    session-memoized EXECUTOR-RESIDENT artifact — the q66 verified-pairs
-    stance applied to the graph family. The basket self-join + support
-    aggregate (the expensive part: quadratic in basket size) runs ONCE
-    per (session, corpus); q154 triangles, q170 coefficients, q179
-    PageRank etc. then pay |E|-sized work only.
+    """Support≥2 co-purchase edge list (u < v, support) as an
+    EXECUTOR-RESIDENT session artifact — the q66 verified-pairs stance
+    applied to the graph family. The basket self-join + support aggregate
+    (the expensive part: quadratic in basket size) runs ONCE per
+    (session, corpus); q154 triangles, q170 coefficients, q179 PageRank
+    etc. then pay |E|-sized work only.
 
     The artifact is a `localCheckpoint(eager=True)` DataFrame: the edge
-    rows live in executor block storage (never on the driver), lineage
-    to the corpus scan is truncated so every downstream graph job starts
-    from the materialized blocks, and the blocks are released by the
-    ContextCleaner when the memoized frame is dropped with the session.
-    This is the single-session face of the 100 TB answer (a bucketed
-    edge TABLE written once via sources/readers.write_bucketed) — same
-    plan shape, storage swapped for the cluster tier. The memo lives on
-    the SparkSession object itself (not a module dict keyed by
-    `id(spark)`), so a GC'd session can never alias a stale artifact.
+    rows live in executor block storage (never on the driver), and
+    lineage to the corpus scan is truncated so every downstream graph job
+    starts from the materialized blocks. ``artifacts.session_artifact``
+    holds it: a rewritten ``lineitem`` file rebuilds it, and the blocks
+    are freed when its directory is evicted from the store. This is the
+    single-session face of the 100 TB answer (a bucketed edge TABLE
+    written once via sources/readers.write_bucketed) — same plan shape,
+    storage swapped for the cluster tier.
     """
-    memo = getattr(spark, _EDGE_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _EDGE_MEMO_ATTR, memo)
-    if sf_dir not in memo:
+    def build() -> DataFrame:
         li = load_table(spark, "lineitem", sf_dir)
         items = li.select("l_orderkey", "l_partkey").distinct()
         a = items.select(F.col("l_orderkey").alias("ok"),
@@ -2038,8 +2029,9 @@ def co_purchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("support"),
             )
         )
-        memo[sf_dir] = und.transform(materialize)
-    return memo[sf_dir]
+        return und.transform(materialize)
+
+    return session_artifact(spark, "co_purchase_edges", sf_dir, build)
 
 
 def co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5144,9 +5136,6 @@ def _q236_cte_prefix() -> str:
     {rounds}"""
 
 
-_LP_MEMO_ATTR = "_etl_globalretail_lp_memo"
-
-
 def lp_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round synchronous label-propagation assignment (v, label) over
     the co-purchase graph — the deterministic trajectory q236, the q246
@@ -5154,12 +5143,10 @@ def lp_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     an executor-resident localCheckpoint artifact per (session, corpus),
     the co_purchase_edges stance one level up: three consumers (× bench
     repetitions) pay the 3 join+window LP rounds once."""
-    memo = getattr(spark, _LP_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _LP_MEMO_ATTR, memo)
-    if sf_dir in memo:
-        return memo[sf_dir]
+    return session_artifact(spark, "lp_labels", sf_dir, lambda: _lp_labels(spark, sf_dir))
+
+
+def _lp_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = co_purchase_edges(spark, sf_dir)  # memoized checkpointed artifact
     sym = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -5181,8 +5168,7 @@ def lp_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select(F.col("dst").alias("v"), "label")
         )
-    memo[sf_dir] = lab.transform(materialize)
-    return memo[sf_dir]
+    return lab.transform(materialize)
 
 
 def _q236_oracle() -> str:
@@ -5425,21 +5411,19 @@ def _q314_oracle() -> str:
     """
 
 
-_L4_MEMO_ATTR = "_etl_globalretail_l4_memo"
-
-
 def louvain_moved_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, label, moved) after ONE synchronized Louvain local-move round
     over the q236 partition — q314's move round as a session-memoized
     executor-resident artifact (the lp_labels device one level up), so
     q314's report and q319's phase-2 contraction pay the gain
     computation once per (session, corpus)."""
-    memo = getattr(spark, _L4_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _L4_MEMO_ATTR, memo)
-    if sf_dir in memo:
-        return memo[sf_dir]
+    return session_artifact(
+        spark, "louvain_moved_labels", sf_dir,
+        lambda: _louvain_moved_labels(spark, sf_dir),
+    )
+
+
+def _louvain_moved_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = co_purchase_edges(spark, sf_dir)  # checkpointed artifact
     # lp_labels is itself a memoized checkpointed artifact — every
     # consuming leg reads its executor-resident blocks (re-persisting a
@@ -5514,9 +5498,9 @@ def louvain_moved_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long").alias("moved"),
         )
     )
-    memo[sf_dir] = materialize(l4)
+    out = materialize(l4)
     own.unpersist()
-    return memo[sf_dir]
+    return out
 
 
 @_register("q314_louvain_move", oracle=_q314_oracle())
@@ -5925,20 +5909,18 @@ def _contract_move_round(edges, sym, m, labels):
     return ce, ck, l5, flat
 
 
-_L5_MEMO_ATTR = "_etl_globalretail_l5_memo"
-
-
 def louvain_level2_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, label) flat partition after the LEVEL-1 contraction round
     (q319's result) as a session-memoized executor-resident artifact —
     the louvain_moved_labels device one level up, so q326's level-2
     round never recomputes level 1."""
-    memo = getattr(spark, _L5_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _L5_MEMO_ATTR, memo)
-    if sf_dir in memo:
-        return memo[sf_dir]
+    return session_artifact(
+        spark, "louvain_level2_labels", sf_dir,
+        lambda: _louvain_level2_labels(spark, sf_dir),
+    )
+
+
+def _louvain_level2_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = co_purchase_edges(spark, sf_dir)
     l4 = louvain_moved_labels(spark, sf_dir)
     m = edges.count()
@@ -5948,10 +5930,10 @@ def louvain_level2_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ce, ck, l5, flat = _contract_move_round(
         edges, sym, m, l4.select("v", "label")
     )
-    memo[sf_dir] = materialize(flat)
+    out = materialize(flat)
     for fr in (ce, ck, l5):
         fr.unpersist()
-    return memo[sf_dir]
+    return out
 
 
 def _q326_round_sql(lvl: str, lab: str) -> str:

@@ -38,6 +38,7 @@ from etl_globalretail_spark.functions.cleansing import (
     standardize_region,
 )
 from etl_globalretail_spark.plans.queries import davg, dsum, make_query_decorator
+from etl_globalretail_spark.sources.artifacts import session_artifact
 from etl_globalretail_spark.sources.readers import calendar_frame, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -64,9 +65,6 @@ def _sk(order_col: str) -> F.Column:
     return F.row_number().over(Window.orderBy(order_col)).cast("long")
 
 
-_SK_MEMO_ATTR = "_etl_globalretail_sk_memo"
-
-
 def _sk_frame(
     df: DataFrame, order_col: str, sk_name: str, memo_key: tuple | None = None
 ) -> DataFrame:
@@ -77,11 +75,12 @@ def _sk_frame(
     dim orders by (the q190 oracle + pytest prove the equivalence), with
     no single-task window at customer/part/supplier grain.
 
-    ``memo_key`` session-memoizes the keyed frame (the q154 edge-memo
-    stance): the reference ETL materializes each dimension ONCE and the
-    fact load reads the stored table (etl_completo.py:1110-1186), so
-    re-deriving the checkpoint per call would charge the fact build for
-    work the warehouse architecture does once per (session, corpus)."""
+    ``memo_key`` = ``(kind, sf_dir)`` keeps the keyed frame as a session
+    artifact (``artifacts.session_artifact``): the reference ETL
+    materializes each dimension ONCE and the fact load reads the stored
+    table (etl_completo.py:1110-1186), so re-deriving the checkpoint per
+    call would charge the fact build for work the warehouse architecture
+    does once per (session, corpus)."""
     from etl_globalretail_spark.sources.readers import global_index
 
     def build() -> DataFrame:
@@ -91,14 +90,8 @@ def _sk_frame(
 
     if memo_key is None:
         return build()
-    spark = df.sparkSession
-    memo = getattr(spark, _SK_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _SK_MEMO_ATTR, memo)
-    if memo_key not in memo:
-        memo[memo_key] = build()
-    return memo[memo_key]
+    kind, sf_dir = memo_key
+    return session_artifact(df.sparkSession, kind, sf_dir, build)
 
 
 # ---------------------------------------------------------------------------

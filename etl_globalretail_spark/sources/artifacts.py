@@ -1,65 +1,120 @@
-"""Artifact materialization: cut lineage once, reuse many times.
+"""Session artifacts: cut lineage once, build once per input, release on eviction.
 
-Every memoized / multi-consumed intermediate in this engine (the
-co-purchase edge artifact, q208's span store, q212's per-round frames,
-the global surrogate index, iterative-loop round states) needs its
-lineage truncated so downstream actions start from materialized data
-instead of re-running the producing plan. Two storage tiers implement
-that same contract:
+``materialize`` cuts a frame's lineage with ``localCheckpoint``: its rows
+become RDD blocks in executor storage, and every later action starts from
+them instead of re-running the producing plan. The blocks are not
+replicated, so losing an executor loses the artifact. Dropping the
+DataFrame does not free them, and neither does ``DataFrame.unpersist``;
+only unpersisting the RDD under the plan's ``LogicalRDD`` leaf does
+(``checkpoint_rdds``).
 
-- **local** (default): ``DataFrame.localCheckpoint`` — RDD blocks in
-  executor storage. Fastest (no DFS round-trip), zero configuration,
-  and exactly right for a single-JVM ``local[*]`` run. Its known
-  weakness at cluster scale: blocks are UNREPLICATED, so losing an
-  executor loses the artifact *and* the (truncated) lineage needed to
-  rebuild it — the job dies.
-- **reliable** (``SPARK_GRAFT_RELIABLE_ARTIFACTS=1``): Spark's
-  reliable ``DataFrame.checkpoint`` — the artifact is written to the
-  checkpoint directory (``SPARK_GRAFT_CHECKPOINT_DIR``, or a
-  per-session temp dir; on a real cluster point it at HDFS/S3). An
-  executor loss now re-reads the surviving files instead of killing
-  the job. Costs one DFS write per artifact — the right trade on a
-  1000-executor / 100 TB run where a lost executor over a multi-hour
-  job is an expectation, not an accident.
+``session_artifact(spark, kind, sf_dir, build)`` builds a derived
+artifact of one input directory once per session and hands the same
+object to every later call: a scan plan, a checkpointed frame, a row list
+or a fitted codebook. The store is one mapping per SparkSession, held
+under a weak key, so it goes away with the session.
 
-Both tiers return a DataFrame with identical rows/schema — pytest
-(`tests/test_artifacts.py`) drives the same queries through each path
-and asserts hash-equal results.
+- **Key.** Entries are keyed ``(sf_dir, kind)``. Each ``sf_dir`` carries a
+  stamp: the ``(path, size, mtime_ns)`` of every parquet file under it,
+  listed by ``parquet_files``. A call that finds a different stamp drops
+  that directory's entries and rebuilds, so a file rewritten in place is
+  never answered from the artifacts of its old contents.
+- **Bound.** The store keeps the ``MAX_DIRS`` most recently used
+  directories.
+- **Eviction.** Dropping a directory, by eviction or by a changed stamp,
+  releases the checkpointed frames among its entries. It always drops a
+  whole directory, never one entry, so an artifact built from another
+  artifact of the same directory (the q326 labels from q314's, from
+  q236's, from the co-purchase edges) never outlives its input in the
+  store.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+import weakref
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-FLAG = "SPARK_GRAFT_RELIABLE_ARTIFACTS"
-DIR_VAR = "SPARK_GRAFT_CHECKPOINT_DIR"
-_TRUTHY = frozenset({"1", "true", "yes", "on"})
-
-
-def reliable_enabled() -> bool:
-    """True when the reliable (DFS-backed) artifact tier is requested."""
-    return os.environ.get(FLAG, "").strip().lower() in _TRUTHY
-
-
-def _ensure_checkpoint_dir(spark) -> None:
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        base = os.environ.get(DIR_VAR) or tempfile.mkdtemp(
-            prefix="spark-graft-ckpt-"
-        )
-        sc.setCheckpointDir(base)
+MAX_DIRS = 4
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut lineage and materialize ``df`` on the configured tier.
-
-    Drop-in replacement for ``df.localCheckpoint(eager=...)`` at every
-    artifact site; see module docstring for the tier semantics.
-    """
-    if reliable_enabled():
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
+    """Cut ``df``'s lineage into executor blocks (``localCheckpoint``)."""
     return df.localCheckpoint(eager=eager)
+
+
+def checkpoint_rdds(df: DataFrame) -> list:
+    """The RDDs under ``df``'s ``LogicalRDD`` leaves, which hold the blocks
+    of a ``materialize``, as ``JavaRDD`` handles: ``unpersist()`` frees them."""
+    out = []
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD":
+            out.append(leaf.rdd().toJavaRDD())
+    return out
+
+
+def parquet_files(path: str) -> list[str]:
+    """``path`` itself if it is a file, else every parquet file under it,
+    walked as Spark lists a table: names starting with ``_`` or ``.`` are
+    skipped. Empty when nothing is there."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+        files += [os.path.join(root, f) for f in sorted(names)
+                  if f.endswith(".parquet") and f[0] not in "_."]
+    return files
+
+
+def _stamp(sf_dir: str) -> tuple:
+    out = []
+    for f in parquet_files(sf_dir):
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+class _Store(dict):
+    """One session's ``(sf_dir, kind) → artifact`` entries; ``stamps``
+    maps each held ``sf_dir`` to its stamp, least recently used first."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.stamps: dict[str, tuple] = {}
+
+    def drop(self, sf_dir: str) -> None:
+        """Forget ``sf_dir`` and free its entries' checkpoint blocks."""
+        del self.stamps[sf_dir]
+        for key in [k for k in self if k[0] == sf_dir]:
+            value = self.pop(key)
+            if isinstance(value, DataFrame):
+                for rdd in checkpoint_rdds(value):
+                    rdd.unpersist()
+
+
+_STORE: "weakref.WeakKeyDictionary[SparkSession, _Store]" = weakref.WeakKeyDictionary()
+
+
+def session_artifact(
+    spark: SparkSession, kind: Any, sf_dir: str, build: Callable[[], Any]
+) -> Any:
+    """``build()``'s result for ``(sf_dir, kind)``, built once per session
+    while the files under ``sf_dir`` are unchanged (see module docstring)."""
+    store = _STORE.setdefault(spark, _Store())
+    stamp = _stamp(sf_dir)
+    if store.stamps.get(sf_dir, stamp) != stamp:
+        store.drop(sf_dir)
+    store.stamps.pop(sf_dir, None)
+    store.stamps[sf_dir] = stamp
+    while len(store.stamps) > MAX_DIRS:
+        store.drop(next(iter(store.stamps)))
+    key = (sf_dir, kind)
+    if key not in store:
+        store[key] = build()
+    return store[key]

@@ -345,7 +345,6 @@ def q280_stateful_eviction_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fine grain makes wave-1 absences (and therefore REAL evictions
     and restarts) common on the fixture; see block comment."""
     from etl_globalretail_spark.streaming.windows import (
-        _Q128_SEQ,
         run_to_memory_sink,
         stage_arrival_waves,
     )
@@ -356,8 +355,7 @@ def q280_stateful_eviction_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(waves.directory)
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q280_sink_{_Q128_SEQ[0]}"
+    sink = "q280_sink"
     # NOTE deliberately NOT scoped_stream_partitions-sized: for
     # applyInPandasWithState the per-batch cost is PYTHON group
     # processing (one pandas round-trip per live group), so partitions

@@ -440,9 +440,6 @@ def quality_gate(
 # Oracle-checked REAL streaming run: the memory-sink result hash-matches SQL.
 # ---------------------------------------------------------------------------
 
-_Q128_SEQ = [0]
-
-
 @_register(
     "q128_streaming_hourly_exact",
     oracle="""
@@ -477,8 +474,7 @@ def q128_streaming_hourly_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     agg = hourly_counts(stream)
-    _Q128_SEQ[0] += 1
-    sink = f"q128_sink_{_Q128_SEQ[0]}"
+    sink = "q128_sink"
     run_to_memory_sink(agg, sink, mode="complete",
                        n_rows=table_rows(spark, "events", sf_dir))
     return spark.table(sink)
@@ -518,8 +514,7 @@ def q133_streaming_sliding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     agg = sliding_value_avg(stream)
-    _Q128_SEQ[0] += 1
-    sink = f"q133_sink_{_Q128_SEQ[0]}"
+    sink = "q133_sink"
     run_to_memory_sink(agg, sink, mode="complete",
                        n_rows=table_rows(spark, "events", sf_dir))
     return spark.table(sink)
@@ -567,8 +562,7 @@ def q143_streaming_sessions_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     agg = sessionize(stream)
-    _Q128_SEQ[0] += 1
-    sink = f"q143_sink_{_Q128_SEQ[0]}"
+    sink = "q143_sink"
     run_to_memory_sink(agg, sink, mode="complete",
                        n_rows=table_rows(spark, "events", sf_dir))
     return spark.table(sink)
@@ -1177,8 +1171,7 @@ def q230_streaming_late_drop_exact(spark: SparkSession, sf_dir: str) -> DataFram
             "event_type", "n_events", "sum_value",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q230_sink_{_Q128_SEQ[0]}"
+    sink = "q230_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -1316,8 +1309,7 @@ def q231_streaming_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = spark.readStream.schema(e.schema).parquet(sdir)
     pairs = purchases_with_recent_click(stream)
-    _Q128_SEQ[0] += 1
-    sink = f"q231_sink_{_Q128_SEQ[0]}"
+    sink = "q231_sink"
     try:
         run_to_memory_sink(pairs, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -1764,8 +1756,7 @@ def q287_streaming_outer_join_exact(
         .parquet(sdir)
     )
     pairs = purchases_with_recent_click(stream, how="leftOuter")
-    _Q128_SEQ[0] += 1
-    sink = f"q287_sink_{_Q128_SEQ[0]}"
+    sink = "q287_sink"
     try:
         run_to_memory_sink(pairs, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -1848,8 +1839,7 @@ def q288_stream_static_enrich_exact(
             F.sum(F.col("value").cast("decimal(27,6)")).alias("sum_dec"),
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q288_sink_{_Q128_SEQ[0]}"
+    sink = "q288_sink"
     run_to_memory_sink(fine, sink, mode="complete",
                        n_rows=table_rows(spark, "events", sf_dir))
     return (
@@ -1970,8 +1960,7 @@ def q303_streaming_full_outer_join_exact(
         .parquet(sdir)
     )
     pairs = purchases_with_recent_click(stream, how="fullOuter")
-    _Q128_SEQ[0] += 1
-    sink = f"q303_sink_{_Q128_SEQ[0]}"
+    sink = "q303_sink"
     try:
         run_to_memory_sink(pairs, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2097,8 +2086,7 @@ def q309_streaming_right_outer_join_exact(
         .parquet(sdir)
     )
     pairs = purchases_with_recent_click(stream, how="rightOuter")
-    _Q128_SEQ[0] += 1
-    sink = f"q309_sink_{_Q128_SEQ[0]}"
+    sink = "q309_sink"
     try:
         run_to_memory_sink(pairs, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2241,8 +2229,7 @@ def q310_streaming_session_join_exact(
             .cast("long").alias("value_cents"),
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q310_sink_{_Q128_SEQ[0]}"
+    sink = "q310_sink"
     try:
         run_to_memory_sink(sess, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2323,8 +2310,7 @@ def q324_streaming_dedup_rollup_exact(
             "event_type", "n_events", "id_sum", "value_cents",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q324_sink_{_Q128_SEQ[0]}"
+    sink = "q324_sink"
     run_to_memory_sink(agg, sink, mode="append",
                        n_rows=table_rows(spark, "events", sf_dir))
     return spark.table(sink)
@@ -2431,8 +2417,7 @@ def q321_streaming_join_rollup_exact(
             .cast("long").alias("value_cents"),
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q321_sink_{_Q128_SEQ[0]}"
+    sink = "q321_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2548,8 +2533,7 @@ def q320_streaming_rollup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_cells", "n_events", "sum_value",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q320_sink_{_Q128_SEQ[0]}"
+    sink = "q320_sink"
     try:
         run_to_memory_sink(rollup, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2671,8 +2655,7 @@ def q333_streaming_join_dedup_rollup_exact(
             "n_purchases", "id_checksum", "value_cents",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q333_sink_{_Q128_SEQ[0]}"
+    sink = "q333_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -2843,8 +2826,7 @@ def q344_streaming_double_join_exact(
             "click_checksum", "view_checksum",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q344_sink_{_Q128_SEQ[0]}"
+    sink = "q344_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -3141,8 +3123,7 @@ def q362_streaming_dedup_join_rollup_exact(
             "n_pairs", "purchase_checksum", "click_checksum",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q362_sink_{_Q128_SEQ[0]}"
+    sink = "q362_sink"
     run_to_memory_sink(agg, sink, mode="append",
                        n_rows=table_rows(spark, "events", sf_dir))
     return spark.table(sink)
@@ -3272,8 +3253,7 @@ def q366_streaming_dedup_nonkey_probe(
             "n_purchases", "id_checksum",
         )
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q366_sink_{_Q128_SEQ[0]}"
+    sink = "q366_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -3431,8 +3411,7 @@ def q371_streaming_agg_join_exact(
         F.expr("n_purchases * 1000L div n_clicks").cast("long")
         .alias("conversion_permil"),
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q371_sink_{_Q128_SEQ[0]}"
+    sink = "q371_sink"
     try:
         run_to_memory_sink(joined, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -3550,8 +3529,7 @@ def q375_streaming_union_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"),
                 "n_rows", "n_clicks", "n_purchases", "checksum")
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q375_sink_{_Q128_SEQ[0]}"
+    sink = "q375_sink"
     try:
         run_to_memory_sink(agg, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -3658,8 +3636,7 @@ def q376_streaming_semi_join_exact(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
         "left_semi",
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q376_sink_{_Q128_SEQ[0]}"
+    sink = "q376_sink"
     try:
         run_to_memory_sink(matched, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))
@@ -3792,8 +3769,7 @@ def q377_streaming_agg_enrich_exact(
         & (F.col("p_ts") <= F.col("wt") + F.expr("INTERVAL 1 HOUR")),
         "inner",
     )
-    _Q128_SEQ[0] += 1
-    sink = f"q377_sink_{_Q128_SEQ[0]}"
+    sink = "q377_sink"
     try:
         run_to_memory_sink(enriched, sink, mode="append",
                            n_rows=table_rows(spark, "events", sf_dir))

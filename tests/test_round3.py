@@ -4,7 +4,7 @@ VERDICT r2 flagged (a) the co-purchase edge artifact's
 collect()+createDataFrame memo (driver OOM at 100x) and (b) data-sized
 outputs round-tripped through the driver to pin schema (q207, q168,
 q170). These tests pin the fixes: the artifact is an executor-resident
-checkpointed DataFrame memoized on the session, and the pair-set
+checkpointed DataFrame held as a session artifact, and the pair-set
 queries return LAZY frames whose plans are real distributed plans (a
 collected result would surface as a bare `Scan ExistingRDD` /
 LocalTableScan leaf with no joins above it).
@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 
 from etl_globalretail_spark.plans import analytics
 from etl_globalretail_spark.plans.registry import ALL_QUERIES as QUERIES
+from etl_globalretail_spark.sources.artifacts import session_artifact
 
 
 def _physical_plan(df: DataFrame) -> str:
@@ -24,13 +25,23 @@ def _physical_plan(df: DataFrame) -> str:
     )
 
 
+def _held(spark, sf_dir, kind):
+    """The session artifact already held for ``kind``; fails if it would
+    have to be built."""
+    def unbuilt():
+        raise AssertionError(f"no {kind} artifact held for {sf_dir}")
+
+    return session_artifact(spark, kind, sf_dir, unbuilt)
+
+
 def test_edge_artifact_is_memoized_dataframe(spark, sf_dir):
     e1 = analytics.co_purchase_edges_weighted(spark, sf_dir)
     e2 = analytics.co_purchase_edges_weighted(spark, sf_dir)
     # memoized: the second call returns the SAME checkpointed frame
     assert e1 is e2
-    memo = getattr(spark, analytics._EDGE_MEMO_ATTR)
-    assert isinstance(memo[sf_dir], DataFrame)  # frame, not driver rows
+    held = _held(spark, sf_dir, "co_purchase_edges")
+    assert held is e1
+    assert isinstance(held, DataFrame)  # frame, not driver rows
     # lineage truncated to the checkpoint blocks: scanning the artifact
     # is an ExistingRDD read, not a corpus re-scan
     plan = _physical_plan(e1)
@@ -42,9 +53,8 @@ def test_edge_artifact_is_memoized_dataframe(spark, sf_dir):
 
 def test_edge_artifact_no_driver_rows(spark, sf_dir):
     analytics.co_purchase_edges(spark, sf_dir)
-    memo = getattr(spark, analytics._EDGE_MEMO_ATTR)
-    for v in memo.values():
-        assert isinstance(v, DataFrame), "edge memo must never hold rows"
+    held = _held(spark, sf_dir, "co_purchase_edges")
+    assert isinstance(held, DataFrame), "edge artifact must never hold rows"
 
 
 def test_pair_set_queries_return_lazy_plans(spark, sf_dir):
