@@ -592,12 +592,13 @@ _register_q180()
 # ---------------------------------------------------------------------------
 # q190 — distributed contiguous surrogate keys: the scale path for W3
 # (SURVEY §7.4 names single-window row_number the 100 TB bottleneck —
-# every row through one partition). global_index (sources/readers) does
-# the classic two-phase assignment: range-partition + in-partition sort,
+# every row through one partition). ranks.global_row_number does the
+# classic two-phase assignment: range-partition + in-partition sort,
 # tiny per-partition count job, offsets broadcast as a literal map, then
-# a PARALLEL per-range window. The oracle is the textbook global
-# ROW_NUMBER — hash equality proves offset+rank ≡ the single window,
-# independent of where the sampled range boundaries fall.
+# a PARALLEL per-range window; the 0-based index is its row number - 1.
+# The oracle is the textbook global ROW_NUMBER — hash equality proves
+# offset+rank ≡ the single window, independent of where the sampled
+# range boundaries fall. The star-schema dims key themselves the same way.
 # ---------------------------------------------------------------------------
 
 
@@ -615,12 +616,11 @@ def _register_q190() -> None:
         """Contiguous 0-based surrogate keys for documents under the
         doc_id total order, assigned by the two-phase range/offset scheme
         (no single-partition window anywhere in the plan)."""
-        from etl_globalretail_spark.sources.readers import global_index
+        from etl_globalretail_spark.operators.ranks import global_row_number
 
         d = load_table(spark, "documents", sf_dir).select("doc_id")
-        return global_index(d, "doc_id").select(
-            "doc_id", F.col("__idx").alias("global_idx")
-        )
+        rn, _ = global_row_number(d, [("doc_id", "asc")])
+        return rn.select("doc_id", (F.col("rn") - 1).alias("global_idx"))
 
 
 _register_q190()
@@ -1620,9 +1620,10 @@ _register_q289()
 # the two audits read head-to-head.
 #
 # Scale shape: bucket assignment needs a GLOBAL rank — the classic
-# single-window funnel — so it rides the q190 range-partitioned
-# global_index device (repartitionByRange + per-partition ranks +
-# driver offsets; no single-partition exchange). The bucket summary is
+# single-window funnel — so it rides q190's range-partitioned
+# ranks.global_row_number (repartitionByRange + per-partition ranks +
+# driver offsets; no single-partition exchange), whose by-product row
+# count is the N of the bucket arithmetic. The bucket summary is
 # B driver rows (the optimizer's own statistics table), actuals are ONE
 # conditional-aggregation pass (vs q271's filter-per-predicate), and
 # the estimator is pure integer math (truncating division) so DuckDB
@@ -1681,12 +1682,9 @@ def _register_q291() -> None:
     ) -> DataFrame:
         """Equi-depth-histogram-estimated vs actual selectivity for the
         q271 predicate triplet; rank-based boundaries via the
-        range-partitioned global index, integer interpolation within
+        range-partitioned global row number, integer interpolation within
         boundary buckets. See block comment."""
-        from etl_globalretail_spark.sources.readers import (
-            global_index,
-            table_rows,
-        )
+        from etl_globalretail_spark.operators.ranks import global_row_number
 
         e = load_table(spark, "events", sf_dir)
         keyed = e.select(
@@ -1694,11 +1692,11 @@ def _register_q291() -> None:
             (F.floor(F.col("value") * 1e6).cast("long") * 10_000_000
              + F.col("event_id")).alias("k"),
         )
-        idx = global_index(keyed, "k")  # __idx = rank-1 under (v, event_id)
-        n_rows = table_rows(spark, "events", sf_dir)
+        # rn = rank under (v, event_id)
+        idx, n_rows = global_row_number(keyed, [("k", "asc")])
         summ = (
             idx.select(
-                F.expr(f"CAST(__idx * {_Q291_B} div {n_rows} AS BIGINT)")
+                F.expr(f"CAST((rn - 1) * {_Q291_B} div {n_rows} AS BIGINT)")
                 .alias("bucket"),
                 "v",
             )

@@ -5,9 +5,11 @@ through one task (``WindowExec: No Partition Defined``) — fine on a
 bounded aggregate, a scale-killer at fact grain (VERDICT r5 item 2: q141's
 ntile and q149's row_number ran the global sort over all of lineitem).
 
-Both helpers here are the standard two-phase decomposition, the same
-device as ``sources.readers.global_index`` generalized to multi-column
-(asc/desc) total orders and to running prefix aggregates:
+The ranged helpers here are the standard two-phase decomposition, over
+multi-column (asc/desc) total orders, for row numbers and for running
+prefix aggregates. ``global_row_number`` is the engine's only global row
+number: the data-sized star-schema dims take their surrogate keys from it
+(``star_schema._sk_frame``), and q190/q291 their global indexes.
 
 1. ``repartitionByRange`` on the sort keys → disjoint, ORDERED key
    ranges; ``sortWithinPartitions`` orders each range internally — all
@@ -25,8 +27,8 @@ Determinism: ``repartitionByRange`` samples boundaries with a
 per-execution seed, so the ranged frame is materialized ONCE
 (``artifacts.materialize``) before the scalar job and the window job read
 it — otherwise the two jobs could re-plan DIFFERENT boundaries and
-compose offsets from one partitioning with ranks from another (the
-``global_index`` determinism note). Given the pin, the composition is
+compose offsets from one partitioning with ranks from another, i.e.
+silently non-contiguous numbers. Given the pin, the composition is
 hash-identical to the single-window form for any boundary placement,
 because the sort order is total (callers pass a unique tie-break).
 """

@@ -40,92 +40,3 @@ for _mod in ("operators.dedup", "operators.similarity", "operators.text",
     _m = __import__(f"etl_globalretail_spark.{_mod}", fromlist=["QUERIES", "ORACLE"])
     _merge(_m.QUERIES, _m.ORACLE)
 
-
-# ---------------------------------------------------------------------------
-# Rotated iteration order (round 10). The driver's differential snapshot
-# examines the registry in ITERATION order and records a 50-entry prefix,
-# so the prefix is ROTATED each round to put never-yet-sampled queries on
-# the driver's correctness gate. This round (VERDICT r9 items 1/2/3):
-# the 44 round-9 additions q368-q411 that shipped after the r9 rotation
-# was locked (all hash-verified by local sf0.01 check_oracle runs; the
-# judge's own r9 re-run passed the 10 it sampled), then the fixed
-# q50_sketch_profile (list column flattened to scalar p50/p95/p99 on
-# both sides, so the comparator no longer crashes), then the two
-# rows-only tiers UPGRADED TO HASH-EXACT oracles this round
-# (q29/q41 - closed-form byte/digest contracts), then three of the five
-# newly shape-only-oracled scale tiers (q25/q28/q36).
-# 54 candidates chase 50 slots: q24_minhash_neardup and
-# q43_dedup_clusters (shape-only oracles registered this round; their
-# md5-exact twins q66/q67 are green) and the now-integer-hashable
-# q74/q235 are DEFERRED to lead the r11 rotation alongside this round's
-# new additions q412-q417 (span runs, BPE loop + encode, winnowing
-# census + index pairs, graph ANN) - documented tradeoff, not an
-# oversight.
-# Membership and implementations are untouched: every query stays
-# registered; this is a reordering only.
-# ---------------------------------------------------------------------------
-
-_SHOWCASE = [
-    "q368_dp_count_release",
-    "q369_consistent_shard_rebalance",
-    "q370_schema_evolution",
-    "q371_streaming_agg_join_exact",
-    "q372_weighted_sample_wor",
-    "q373_temperature_mixture",
-    "q374_zorder_layout",
-    "q375_streaming_union_exact",
-    "q376_streaming_semi_join_exact",
-    "q377_streaming_agg_enrich_exact",
-    "q378_dsir_selection",
-    "q379_lsh_recall_audit",
-    "q380_dedup_threshold_sweep",
-    "q381_fd_audit",
-    "q382_pass_at_k",
-    "q383_corpus_diversity",
-    "q384_forecast_baselines",
-    "q385_kaplan_meier",
-    "q386_wilson_ranking",
-    "q387_greedy_max_coverage",
-    "q388_krippendorff_alpha",
-    "q389_pinball_quantile_eval",
-    "q390_simpson_audit",
-    "q391_good_turing",
-    "q392_isotonic_calibration",
-    "q393_permutation_test",
-    "q394_acf_panel",
-    "q395_rfm_segmentation",
-    "q396_fellegi_sunter",
-    "q397_bh_fdr",
-    "q398_curriculum_order",
-    "q399_hash_chain_audit",
-    "q400_neyman_stratified_sample",
-    "q401_shapley_source_value",
-    "q402_burst_segmentation",
-    "q403_quantile_normalization",
-    "q404_var_expected_shortfall",
-    "q405_rake_keyphrases",
-    "q406_exponential_smoothing",
-    "q407_streaming_ledger",
-    "q408_source_contamination_matrix",
-    "q409_dow_seasonal_index",
-    "q410_difference_in_differences",
-    "q411_hhi_concentration",
-    "q50_sketch_profile",
-    "q29_multimodal_features",
-    "q41_multimodal_pipeline",
-    "q25_simhash_neardup",
-    "q28_ann_lsh",
-    "q36_ann_ivf",
-]
-# Queries past the 50-slot prefix keep their registration untouched;
-# deferred-to-r11 gate candidates are listed in the rotation note above.
-
-assert set(_SHOWCASE) <= set(ALL_QUERIES), sorted(
-    set(_SHOWCASE) - set(ALL_QUERIES)
-)
-assert len(_SHOWCASE) == len(set(_SHOWCASE)), "duplicate showcase entry"
-
-ALL_QUERIES = {
-    **{k: ALL_QUERIES[k] for k in _SHOWCASE},
-    **{k: v for k, v in ALL_QUERIES.items() if k not in set(_SHOWCASE)},
-}

@@ -6,14 +6,19 @@ dim_cliente, part → dim_produto, supplier → dim_fornecedor, a generated
 calendar → dim_tempo, and orders ⨝ lineitem → fato_vendas with surrogate-key
 lookups and the full measure derivation.
 
+Order follows the reference: the dimensions are built first, each keyed
+frame kept as a session artifact, and the fact looks its keys up in those
+same artifacts instead of re-deriving them. ``run_full_etl`` takes its
+summary counts from the written files' parquet footers.
+
 Shape changes vs the reference (each noted at the operator):
 
 - per-row INSERT + point-lookup joins (O(rows) round trips,
   etl_completo.py:637-663) → broadcast hash joins, one job per table;
 - SERIAL surrogate keys → ``row_number() over (order by natural key)`` —
-  deterministic and testable (SURVEY.md W3); the single-partition window
-  shuffle is priced only on dimensions, which are small by definition.
-  The fact table carries a composite natural id instead of a SERIAL
+  deterministic and testable (SURVEY.md W3); data-sized dims get it from
+  the two-phase ``ranks.global_row_number``, bounded ones from a single
+  window. The fact table carries a composite natural id instead of a SERIAL
   (sk_venda is never referenced downstream in the reference — SURVEY.md
   §7.4);
 - rows with unparseable dates are dropped, rows with missing dim matches
@@ -37,9 +42,14 @@ from etl_globalretail_spark.functions.cleansing import (
     standardize_product_category,
     standardize_region,
 )
+from etl_globalretail_spark.operators.ranks import global_row_number
 from etl_globalretail_spark.plans.queries import davg, dsum, make_query_decorator
 from etl_globalretail_spark.sources.artifacts import session_artifact
-from etl_globalretail_spark.sources.readers import calendar_frame, load_table
+from etl_globalretail_spark.sources.readers import (
+    calendar_frame,
+    load_table,
+    parquet_footer,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -66,32 +76,18 @@ def _sk(order_col: str) -> F.Column:
 
 
 def _sk_frame(
-    df: DataFrame, order_col: str, sk_name: str, memo_key: tuple | None = None
+    df: DataFrame, order_col: str, sk_name: str, kind: str, sf_dir: str
 ) -> DataFrame:
-    """W3 surrogate keys for DATA-SIZED dims via the two-phase
-    ``readers.global_index`` (repartitionByRange + per-partition counts +
-    offset map + parallel per-range window): identical values to
-    ``row_number() over (order by key)`` for the UNIQUE natural keys every
-    dim orders by (the q190 oracle + pytest prove the equivalence), with
-    no single-task window at customer/part/supplier grain.
-
-    ``memo_key`` = ``(kind, sf_dir)`` keeps the keyed frame as a session
-    artifact (``artifacts.session_artifact``): the reference ETL
-    materializes each dimension ONCE and the fact load reads the stored
-    table (etl_completo.py:1110-1186), so re-deriving the checkpoint per
-    call would charge the fact build for work the warehouse architecture
-    does once per (session, corpus)."""
-    from etl_globalretail_spark.sources.readers import global_index
-
-    def build() -> DataFrame:
-        return global_index(df, order_col).withColumn(
-            sk_name, (F.col("__idx") + 1).cast("long")
-        ).drop("__idx")
-
-    if memo_key is None:
-        return build()
-    kind, sf_dir = memo_key
-    return session_artifact(df.sparkSession, kind, sf_dir, build)
+    """W3 surrogate keys for DATA-SIZED dims: ``df`` with ``sk_name`` =
+    ``row_number() over (order by order_col)``, assigned by the two-phase
+    ``ranks.global_row_number`` (no single-task window at customer/part/
+    supplier grain; the natural keys are unique, so the order is total).
+    The keyed frame is the session artifact ``(sf_dir, kind)``: the dim is
+    built once per session, and the fact load joins that same artifact."""
+    return session_artifact(
+        df.sparkSession, kind, sf_dir,
+        lambda: global_row_number(df, [(order_col, "asc")], sk_name)[0],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -131,8 +127,7 @@ def build_dim_cliente(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(loc), c.c_nationkey == loc.id_localidade, "left"
     )
     return (
-        _sk_frame(base, "c_custkey", "sk_cliente",
-                  memo_key=("dim_cliente", sf_dir))
+        _sk_frame(base, "c_custkey", "sk_cliente", "dim_cliente", sf_dir)
         .select(
             "sk_cliente",
             F.col("c_custkey").alias("id_cliente"),
@@ -159,8 +154,7 @@ def build_dim_produto(spark: SparkSession, sf_dir: str) -> DataFrame:
     custo = preco * F.lit(0.7)
     base = p.join(avg_sold, p.p_partkey == F.col("l_partkey"), "left")
     return (
-        _sk_frame(base, "p_partkey", "sk_produto",
-                  memo_key=("dim_produto", sf_dir))
+        _sk_frame(base, "p_partkey", "sk_produto", "dim_produto", sf_dir)
         .select(
             "sk_produto",
             F.col("p_partkey").alias("id_produto"),
@@ -186,8 +180,7 @@ def build_dim_fornecedor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(loc), s.s_nationkey == loc.id_localidade, "left"
     )
     return (
-        _sk_frame(base, "s_suppkey", "sk_fornecedor",
-                  memo_key=("dim_fornecedor", sf_dir))
+        _sk_frame(base, "s_suppkey", "sk_fornecedor", "dim_fornecedor", sf_dir)
         .select(
             "sk_fornecedor",
             F.col("s_suppkey").alias("id_fornecedor"),
@@ -234,6 +227,10 @@ def build_fato_vendas(
     one join, two payload columns) → composite id (F15) → dedup on the
     natural key (A3/S5 idempotency).
 
+    The lookups are the built dims, pruned to the columns the fact reads.
+    Each sits on its dim's session artifact, so once the dims exist the
+    fact plan runs no further surrogate-key job.
+
     ``with_ano=True`` appends the order year — the physical partition column
     ``run_full_etl`` writes the fact under (the Spark analog of the
     reference's composite temporal indexes, cria_indices_dw.sql:25-26:
@@ -244,33 +241,13 @@ def build_fato_vendas(
     o = load_table(spark, "orders", sf_dir)
     l = load_table(spark, "lineitem", sf_dir)
     tempo = build_dim_tempo(spark).select("sk_tempo", "data_completa")
-    # Slim dim lookups built straight from the raw tables: the full builders
-    # carry snowflake joins (localidade), windows, and cleansing expressions
-    # the fact never reads — and Catalyst cannot eliminate an unused left
-    # join whose right side it can't prove unique (row_number output), so
-    # using them here would keep every one of those operators in the fact's
-    # physical plan (and, for produto, pay a whole extra lineitem
-    # scan+shuffle for the avg-sold enrichment). SKs are row_number over the
-    # same natural key in both shapes, so the keys match by construction.
-    c = load_table(spark, "customer", sf_dir)
-    cli = _sk_frame(
-        c.select("c_custkey"), "c_custkey", "sk_cliente",
-        memo_key=("fato_cli", sf_dir),
-    ).select("sk_cliente", F.col("c_custkey").alias("id_cliente"))
-    p = load_table(spark, "part", sf_dir)
-    prod = _sk_frame(
-        p.select("p_partkey", "p_retailprice"), "p_partkey", "sk_produto",
-        memo_key=("fato_prod", sf_dir),
-    ).select(
-        "sk_produto",
-        F.col("p_partkey").alias("id_produto"),
-        (F.col("p_retailprice") * F.lit(0.7)).alias("custo_unitario"),
+    cli = build_dim_cliente(spark, sf_dir).select("sk_cliente", "id_cliente")
+    prod = build_dim_produto(spark, sf_dir).select(
+        "sk_produto", "id_produto", "custo_unitario"
     )
-    s = load_table(spark, "supplier", sf_dir)
-    forn = _sk_frame(
-        s.select("s_suppkey"), "s_suppkey", "sk_fornecedor",
-        memo_key=("fato_forn", sf_dir),
-    ).select("sk_fornecedor", F.col("s_suppkey").alias("id_fornecedor"))
+    forn = build_dim_fornecedor(spark, sf_dir).select(
+        "sk_fornecedor", "id_fornecedor"
+    )
 
     qty = F.when(F.col("l_quantity") > 0, F.col("l_quantity")).otherwise(F.lit(0.0))
     preco = F.when(F.col("l_extendedprice") > 0, F.col("l_extendedprice")).otherwise(
@@ -334,9 +311,9 @@ def build_fato_vendas(
 
 def run_full_etl(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """The whole pipeline (reference run_full_etl, etl_completo.py:1110-1186):
-    build every dimension, then the fact, write each as parquet, return the
-    summary row counts (A2). Dependency order is just dataflow here — each
-    builder declares its inputs."""
+    build every dimension, then the fact from the dims' artifacts, write
+    each as parquet, and return the summary row counts (A2), read from the
+    written files' parquet footers rather than by scanning them back."""
     outputs = {
         "dim_localidade": build_dim_localidade(spark, sf_dir),
         "dim_cliente": build_dim_cliente(spark, sf_dir),
@@ -357,7 +334,7 @@ def run_full_etl(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
             # tiny files per year of data, the classic small-files failure.
             writer = writer.partitionBy("ano")
         writer.parquet(f"{out_dir}/{name}")
-        counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+        counts[name] = parquet_footer(f"{out_dir}/{name}")[1]
     return counts
 
 
@@ -698,8 +675,7 @@ def q44_dim_loja(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left",
     )
     return (
-        _sk_frame(base, "s_suppkey", "sk_loja",
-                  memo_key=("dim_loja", sf_dir))
+        _sk_frame(base, "s_suppkey", "sk_loja", "dim_loja", sf_dir)
         .select(
             "sk_loja",
             F.col("s_suppkey").alias("id_loja"),

@@ -29,7 +29,6 @@ from pyspark.sql.pandas.types import from_arrow_type
 from etl_globalretail_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from etl_globalretail_spark.sources.artifacts import (
     _STORE,
-    materialize,
     parquet_files,
     session_artifact,
 )
@@ -375,59 +374,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def global_index(df, order_col: str, n_ranges: int = 16):
-    """Contiguous global 0-based index under a total order — the 100 TB
-    surrogate-key generator SURVEY §7.4 flags as the hard part. A plain
-    ``row_number() over (order by k)`` funnels every row through ONE
-    partition; this is the standard two-phase replacement:
-
-      1. ``repartitionByRange(order_col)`` + in-partition sort — disjoint,
-         ordered ranges, every partition sorted internally (parallel);
-      2. per-partition row counts (one tiny job), cumulative offsets on
-         the driver (P integers);
-      3. index = partition_offset + in-partition row_number, where the
-         in-partition window is PARTITIONED BY the range id — parallel,
-         never a single-partition exchange.
-
-    Deterministic for a unique ``order_col``: range boundaries vary with
-    sampling, but offset+rank composes to the same global index as the
-    single-window form regardless of where the boundaries fall (pytest +
-    the q190 oracle assert exactly this equivalence).
-
-    The ranged frame is materialized ONCE (``localCheckpoint(eager=True)``)
-    before either consumer: ``repartitionByRange`` samples boundaries with
-    a per-execution seed (RDD id), so without the pin the counts job (2)
-    and the window job (3) could re-plan DIFFERENT boundaries and compose
-    offsets from one partitioning with ranks from another — silently
-    non-contiguous indexes. Checkpointing freezes one partitioning that
-    both jobs read.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    ranged = (
-        df.repartitionByRange(n_ranges, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(materialize)
-    )
-    counts = sorted(
-        ranged.groupBy("__pid").count().collect(), key=lambda r: r["__pid"]
-    )
-    offsets, acc = {}, 0
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["count"]
-    off = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("__pid").orderBy(order_col)
-    return ranged.withColumn(
-        "__idx",
-        (off[F.col("__pid")] + F.row_number().over(w) - 1).cast("long"),
-    ).drop("__pid")
 
 
 def fast_count(sf_dir: str, table: str) -> int:

@@ -117,7 +117,7 @@ FORBIDDEN_UNLESS_INTENTIONAL = ("BroadcastNestedLoopJoin", "CartesianProduct")
 # documented-scale-path) justification, exactly like INTENTIONAL_CROSS.
 INTENTIONAL_GLOBAL_WINDOW = {
     # W3 dim surrogate keys: DATA-SIZED dims (customer/part/supplier/
-    # store) assign sks via the two-phase readers.global_index
+    # store) assign sks via the two-phase ranks.global_row_number
     # (star_schema._sk_frame) — no single-task window at those grains.
     # The single-window _sk survives ONLY at genuinely bounded grains,
     # whitelisted below per query:

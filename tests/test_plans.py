@@ -25,8 +25,8 @@ def _plan(df) -> str:
 def test_fact_build_is_broadcast_only(spark, sf_dir, qs):
     """q32: every join is a broadcast hash join (dims are dim-sized by
     construction); the only non-broadcast hash exchanges are the dedup
-    groupBy's l_orderkey shuffle and the dim-sized __pid partitionings of
-    the two-phase surrogate-key windows (_sk_frame/global_index)."""
+    groupBy's l_orderkey shuffle and the dim-sized __rk_pid partitionings
+    of the two-phase surrogate-key windows (_sk_frame/global_row_number)."""
     plan = _plan(qs["q32_fato_vendas"](spark, sf_dir))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 5
@@ -34,7 +34,7 @@ def test_fact_build_is_broadcast_only(spark, sf_dir, qs):
     bad = [
         h.strip() for h in hash_exchanges
         if not (h.strip().startswith("l_orderkey")
-                or h.strip().startswith("__pid"))
+                or h.strip().startswith("__rk_pid"))
     ]
     assert not bad, hash_exchanges
 

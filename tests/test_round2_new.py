@@ -375,12 +375,15 @@ def test_global_index_contiguous_and_ordered(spark, sf_dir):
 
 def test_global_index_boundary_invariance(spark, sf_dir):
     # different range counts must yield the identical assignment
-    from etl_globalretail_spark.sources.readers import global_index, load_table as lt
+    from etl_globalretail_spark.operators.ranks import global_row_number
 
-    d = lt(spark, "documents", sf_dir).select("doc_id")
-    a = {r["doc_id"]: r["__idx"] for r in global_index(d, "doc_id", 3).collect()}
-    b = {r["doc_id"]: r["__idx"] for r in global_index(d, "doc_id", 11).collect()}
-    assert a == b
+    d = load_table(spark, "documents", sf_dir).select("doc_id")
+
+    def ranks(n_ranges):
+        rn, _ = global_row_number(d, [("doc_id", "asc")], n_ranges=n_ranges)
+        return {r["doc_id"]: r["rn"] for r in rn.collect()}
+
+    assert ranks(3) == ranks(11)
 
 
 # ---------------------------------------------------------------------------

@@ -175,9 +175,12 @@ def test_q230_watermark_semantics_pinned(spark, sf_dir):
 
 
 def test_global_index_contiguous_after_checkpoint(spark, sf_dir):
-    from etl_globalretail_spark.sources.readers import global_index, load_table
+    from etl_globalretail_spark.operators.ranks import global_row_number
+    from etl_globalretail_spark.sources.readers import load_table
 
     c = load_table(spark, "customer", sf_dir)
-    idx = global_index(c.select("c_custkey"), "c_custkey", n_ranges=4)
-    rows = idx.orderBy("c_custkey").select("__idx").collect()
-    assert [r["__idx"] for r in rows] == list(range(c.count()))
+    idx, _ = global_row_number(
+        c.select("c_custkey"), [("c_custkey", "asc")], n_ranges=4
+    )
+    rows = idx.orderBy("c_custkey").select("rn").collect()
+    assert [r["rn"] for r in rows] == list(range(1, c.count() + 1))

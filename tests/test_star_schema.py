@@ -3,15 +3,20 @@ sf0.001, row counts, SK properties, measure identities."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.star_schema import (
     build_dim_cliente,
+    build_dim_fornecedor,
+    build_dim_produto,
     build_dim_tempo,
     build_fato_vendas,
     run_full_etl,
 )
+from etl_globalretail_spark.schemas import TABLE_NAMES
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +34,21 @@ def test_row_counts(etl_out):
     assert counts["dim_fornecedor"] == 10
     assert counts["dim_tempo"] == 2557  # 1995-01-01..2001-12-31
     assert counts["fato_vendas"] == 5942  # distinct (orderkey, partkey)
+
+
+def test_fact_after_dims_submits_no_spark_job(spark, sf_dir, tmp_path):
+    """The fact looks its keys up in the dims' session artifacts: once the
+    three data-sized dims are built, building the fact runs no job."""
+    for t in TABLE_NAMES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path)
+    fresh = str(tmp_path)
+    for build in (build_dim_cliente, build_dim_produto, build_dim_fornecedor):
+        build(spark, fresh)
+    spark.range(1).count()  # settle any job a previous test left queued
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.nextJobId()
+    build_fato_vendas(spark, fresh)
+    assert jobs.nextJobId() == before
 
 
 def test_surrogate_keys_dense_and_unique(spark, etl_out):
