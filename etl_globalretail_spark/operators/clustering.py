@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
 from etl_globalretail_spark.sources.artifacts import session_artifact
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -68,8 +68,9 @@ def kmeans_fit(
     # (measured ~0.65 s/round at sf0.1's 2 000 vectors). One task per
     # ~32 k vectors, capped at the cluster's parallelism — at 100 TB the
     # cap binds and this is a no-op; on small corpora rounds collapse to
-    # a handful of tasks. (Same device as sources/readers._spread, in
-    # the opposite direction.)
+    # a handful of tasks. (sources/readers._spread sizes a scan the
+    # other way: it adds partitions only when the scan reads on fewer
+    # tasks than its consumer needs.)
     raw = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
@@ -408,7 +409,7 @@ def q122_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible, but the broadcast-fold is the plan that survives 100 TB;
     integer associativity is what lets the two forms agree bit-for-bit.
     """
-    e = load_table(spark, "embeddings", sf_dir)
+    e = load_table_spread(spark, "embeddings", sf_dir)
     raw = e.select(
         "vec_id", _qvec(F.col("embedding")).alias("qv")
     ).persist()

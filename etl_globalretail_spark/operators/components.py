@@ -43,7 +43,7 @@ from etl_globalretail_spark.sources.artifacts import (
     materialize,
     session_artifact,
 )
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -242,7 +242,7 @@ def q43_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic (seeded LSH upstream, min-id representatives)."""
     from etl_globalretail_spark.operators.dedup import minhash_near_duplicates
 
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     held: list = []
     pairs = minhash_near_duplicates(d, "text", "doc_id", materialized=held)
     pairs = pairs.persist()
@@ -340,7 +340,7 @@ def _register_q86() -> None:
         from etl_globalretail_spark.operators import dedup
         from etl_globalretail_spark.operators.sampling import hash_bucket
 
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         pairs = dedup.QUERIES["q66_minhash_pairs_exact"](spark, sf_dir).persist()
         held: list = []
         try:
@@ -729,7 +729,7 @@ def _register_q200() -> None:
         )
         from etl_globalretail_spark.operators.text import token_count
 
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         base = d.select(
             "doc_id", "lang", "source",
             token_count(F.col("text")).alias("ntok"),

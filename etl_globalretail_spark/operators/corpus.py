@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 from etl_globalretail_spark.operators.sampling import N_BUCKETS, _sql_bucket, hash_bucket
 from etl_globalretail_spark.plans.queries import make_query_decorator
 from etl_globalretail_spark.operators.ranks import global_topk
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 from etl_globalretail_spark.sources.artifacts import materialize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -319,7 +319,7 @@ def q90_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     are flagged for top-bigram coverage ≥ 10%, with id sums pinning the
     flagged set. The scoring pass itself is shuffle-free (see
     repetition_stats); only this audit aggregates."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     scored = repetition_stats(d)
     flagged = F.col("rep_permil") >= _Q90_THRESHOLD
     return scored.groupBy("lang").agg(
@@ -485,7 +485,7 @@ def q92_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 TF-IDF terms per language — the corpus-relevance face of text
     analysis (which terms characterize each language slice against the
     whole corpus)."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     return tfidf_top_terms(d, top_k=5)
 
 
@@ -772,7 +772,7 @@ def q139_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-over-hash trick); integer permil via // ≡ Spark's div on
     non-negative ints.
     """
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     return dup_span_stats(d, "doc_id", "text")
 
 
@@ -827,7 +827,7 @@ def q140_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences to |alphabet|² grouped rows per partition before exchange.
     Top-k via rank over the tiny grouped frame.
     """
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     words = d.select(
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
     )
@@ -1201,7 +1201,7 @@ def q164_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually used downstream. No vocabulary job exists anywhere in the
     plan; the map-side hash IS the encoder."""
     e = load_table(spark, "events", sf_dir)
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
 
     def enc(df, col):
         slot, sign = _fh_slot_sign(col, _FH_DIM)
@@ -1460,7 +1460,7 @@ def q173_length_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-based drift test that needs no binning choice (q172's L1 needs a
     bin width; KS is its parameter-free sibling). All-integer ECDF cross
     terms; one final division."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     return ks_statistic(d, "lang", "en", "de", "n_chars")
 
 
@@ -1547,7 +1547,7 @@ def q185_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token budget after removing every cross-document
     duplicated 5-word span: doc census, total tokens, covered (removed)
     tokens via interval-union islands, and the surviving token count."""
-    return span_scrub(load_table(spark, "documents", sf_dir))
+    return span_scrub(load_table_spread(spark, "documents", sf_dir))
 
 
 def span_scrub(docs: DataFrame) -> DataFrame:
@@ -1728,7 +1728,7 @@ def q189_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language out-of-vocabulary census against the corpus's own
     top-20 token vocabulary (total-ordered cut): token count, OOV count,
     integer OOV permil."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     tok = d.select(
         "lang", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
     )
@@ -1799,7 +1799,7 @@ def q189_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q208_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered source-pair overlap: distinct 5-word spans of A also seen
     in B, with the exact integer overlap permil of A's span set."""
-    docs = load_table(spark, "documents", sf_dir)
+    docs = load_table_spread(spark, "documents", sf_dir)
     # Checkpoint: the span set feeds sizes AND both self-join sides — the
     # expensive explode+distinct runs once, consumers read executor blocks.
     spans = (
@@ -2148,7 +2148,7 @@ def q232_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the corpus's own bigram model — the n-gram perplexity-filter
     operator. Model and scores are exact integers, so the DuckDB twin
     hash-matches."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     # Bigram stream: one explode pass, checkpointed — consumed by the
     # model build AND the scoring join (plan-discipline rule).
     bg = (
@@ -2343,7 +2343,7 @@ def q239_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token coverage of the UNION of cross-doc duplicated
     k-gram spans (gap-island interval merge, all-integer) — the
     positional statistic exact-substring trimming thresholds."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     base = d.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
@@ -2593,7 +2593,7 @@ def bpe_learn(
     (vocabulary build); rounds iterate on the persisted |V|-row
     vocabulary; each round's best pair is a 1-row driver scalar
     (bounded by construction, the q74-centroid convention)."""
-    docs = load_table(spark, "documents", sf_dir)
+    docs = load_table_spread(spark, "documents", sf_dir)
     vocab = (
         docs.select(F.explode(alpha_tokens(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -2702,7 +2702,7 @@ def _register_q244() -> None:
         over each document's token array."""
         merges = bpe_learn(spark, sf_dir)
         p1, p2, p3 = (m[1] + m[2] for m in merges)
-        docs = load_table(spark, "documents", sf_dir)
+        docs = load_table_spread(spark, "documents", sf_dir)
         toks = alpha_tokens(F.col("text"))
         enc = (
             f"transform(filter(split(lower(trim(text)), '\\\\s+'),"
@@ -2801,7 +2801,7 @@ def _register_q258() -> None:
         """Top-20 token bigrams by integer lift (log-free PMI); unigram
         counts taken over bigram SLOTS so numerator and denominator
         share one sample space. See block comment."""
-        docs = load_table(spark, "documents", sf_dir)
+        docs = load_table_spread(spark, "documents", sf_dir)
         toks = alpha_tokens(F.col("text"))
         pos = docs.select(toks.alias("t")).filter(F.size("t") >= 2).select(
             "t", F.explode(F.sequence(F.lit(1), F.size("t") - 1)).alias("i")
@@ -3210,7 +3210,7 @@ def q294_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} most target-like documents by DSIR hashed-unigram
     importance ratio (target = lang='en'), exact integer ppm; see block
     comment.""".format(k=_DSIR_TOPK)
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     tb = (
         d.select(
             "doc_id", "lang",
@@ -3393,7 +3393,7 @@ def _register_q301() -> None:
         """Minimum-cost unigram segmentation of every distinct corpus
         word (char+bigram inventory, integer costs): (word, len,
         min_cost, number of optimal segmentations). See block comment."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         winst = d.select(
             F.explode(alpha_tokens(F.col("text"))).alias("w")
         )
@@ -3709,7 +3709,7 @@ def _register_q307() -> None:
         usage from the forward×backward path-count edge marginals (u1
         under frequency costs, u2 under the round-1 re-estimation) and
         the final re-estimated cost. See block comment."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         winst = d.select(
             F.explode(alpha_tokens(F.col("text"))).alias("w")
         )
@@ -3977,7 +3977,7 @@ def _q308_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens,
     )
 
-    docs = load_table(spark, "documents", sf_dir)
+    docs = load_table_spread(spark, "documents", sf_dir)
     stats = docs.select(
         "lang", "source",
         token_count(F.col("text")).alias("nt"),
@@ -4572,7 +4572,7 @@ def _register_q317() -> None:
         ).collect()
         c1 = {r["piece"]: r["cost2"] for r in trained if len(r["piece"]) == 1}
         c2 = {r["piece"]: r["cost2"] for r in trained if len(r["piece"]) == 2}
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         words = (
             d.select(F.explode(alpha_tokens(F.col("text"))).alias("w"))
             .distinct()
@@ -4713,7 +4713,7 @@ def _register_q322() -> None:
         k = max(4, (len(bigs) + 1) // 2)
         keep = {p for _, p in ranked[:k]}
         c2 = {p: (c if p in keep else _Q301_HUGE) for p, c, _ in bigs}
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         words = (
             d.select(F.explode(alpha_tokens(F.col("text"))).alias("w"))
             .distinct()
@@ -5320,7 +5320,7 @@ def _register_q348() -> None:
         comment."""
         from pyspark.sql.window import Window
 
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         toks = (
             d.select(
                 "doc_id",
@@ -7104,7 +7104,7 @@ def _register_q412() -> None:
         """Maximal variable-length duplicated-span runs per document
         (exact-substring dedup, Lee et al. 2022 shape). See block
         comment; dup_windows ≡ q139's dup_spans by construction."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         spans = d.select(
             F.col("doc_id").alias("doc"),
             F.posexplode(span_hashes(F.col("text"))).alias("pos0", "h"),

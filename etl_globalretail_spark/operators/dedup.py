@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 from etl_globalretail_spark.operators.text import _sql_tokens, tokens
 from etl_globalretail_spark.plans.queries import make_query_decorator
 from etl_globalretail_spark.sources.artifacts import materialize, session_artifact
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -265,7 +265,7 @@ def jaccard_pairs(
 )
 def q23_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact bigram-Jaccard near-duplicate pairs (τ=0.4) over documents."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     p = jaccard_pairs(d, "text", "doc_id", k=2, threshold=0.4)
     return p.select(
         "id_a",
@@ -616,7 +616,7 @@ def q24_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus size before/after greedy removal. Deterministic (seeded hash
     family), but xxhash64 has no DuckDB twin → shape-only oracle; the exact
     Jaccard tier (q23) is the oracle-checked ground truth it approximates."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     held: list = []
     pairs = minhash_near_duplicates(
         d, "text", "doc_id", materialized=held
@@ -1362,7 +1362,7 @@ def q80_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-nation near-duplicate customer names (edit distance ≤ 2,
     blocked on nation + exact length): the fuzzy tier of the dedup ladder
     — catches the typo'd re-registrations exact hashing cannot."""
-    c = load_table(spark, "customer", sf_dir)
+    c = load_table_spread(spark, "customer", sf_dir)
     return fuzzy_pairs(c, "c_custkey", "c_name", ["c_nationkey"], 2)
 
 
@@ -1466,7 +1466,7 @@ def q87_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark slice (ids ≡ 0 mod 17), id-sum pinning the exact flagged
     set. Removal is an anti-join on the flagged ids — audited here,
     composable with q47/q86's split machinery."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     bench = d.filter(F.col("doc_id") % 17 == 0)
     corpus = d.filter(F.col("doc_id") % 17 != 0)
     flagged = contamination_audit(corpus, bench, "doc_id", "text")
@@ -1538,7 +1538,7 @@ def q132_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, the cross-side candidate join, the verification) is
     replayed in SQL bit-for-bit.
     """
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     hs = F.array_distinct(
         F.transform(
             word_shingles(F.col("text"), 2),
@@ -1753,7 +1753,7 @@ def q156_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The slice keeps the demo honest about the algorithm without paying
     the degenerate corpus's quadratic verify.
     """
-    d = load_table(spark, "documents", sf_dir).filter(
+    d = load_table_spread(spark, "documents", sf_dir).filter(
         F.col("doc_id") % 3 == 0
     )
     verified, base = prefix_filtered_pairs(d, "text", "doc_id")
@@ -1827,7 +1827,7 @@ def q156_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q178_dedup_tier_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlap census of the exact / normalized / MinHash flag sets."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
 
     fp = F.md5(F.array_join(tokens(F.col("text")), " "))
     we = Window.partitionBy(fp).orderBy("doc_id")
@@ -1924,7 +1924,7 @@ def _register_q207() -> None:
         """Directed pairs with hashed-shingle containment ≥ 0.7 on the
         mod-3 corpus slice — one-sided prefix-filtered, proven lossless
         against the brute-force posting join."""
-        d = load_table(spark, "documents", sf_dir).filter(
+        d = load_table_spread(spark, "documents", sf_dir).filter(
             F.col("doc_id") % 3 == 0
         )
         hs = F.array_sort(
@@ -2067,7 +2067,7 @@ def _register_q278() -> None:
     ) -> DataFrame:
         """Signature-agreement → true-Jaccard calibration bins over the
         raw band-collision candidates; see block comment."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         hs = F.array_distinct(
             F.transform(
                 word_shingles(F.col("text"), 2),
@@ -2316,7 +2316,7 @@ def q329_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     span dedup): each doc reports its tile count, surviving tiles, and
     the rewritten text's length + md5. See block comment."""
     k = _REWRITE_K
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     dd = d.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     ).withColumn("n_segs", F.expr(f"(size(toks) + {k - 1}) div {k}"))
@@ -2461,7 +2461,7 @@ def q337_weighted_cosine_pairs(
 ) -> DataFrame:
     """Document pairs with tf-idf 4-gram-shingle cosine ≥ 0.5 — the exact
     weighted AllPairs audit tier. See block comment."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     base = d.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     )
@@ -3247,7 +3247,7 @@ def _register_q408() -> None:
         """Pairwise 5-gram overlap + Jaccard between sources via the
         per-shingle source-bitmask census; only contaminated pairs
         emitted. See block comment."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         sh = d.select(
             (F.substring(F.col("source"), 4, 10).cast("long"))
             .alias("g"),

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import dsum, make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -445,7 +445,7 @@ def _register_q99() -> None:
         even the vocabulary aggregate is too wide to shuffle."""
         from etl_globalretail_spark.operators.text import q72_top_tokens, tokens
 
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         occ = d.select(F.explode(tokens(F.col("text"))).alias("token"))
         sketch = countmin_build(occ, "token")
         top10 = (

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 from etl_globalretail_spark.sources.artifacts import materialize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -410,7 +410,7 @@ def q238_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-rank 5%/95% bootstrap CI of mean order value per priority,
     from 32 deterministic keyed half-samples (replica −1 = the full
     sample, sharing the single scan)."""
-    o = load_table(spark, "orders", sf_dir)
+    o = load_table_spread(spark, "orders", sf_dir)
     base = o.select(
         F.col("o_orderpriority").alias("priority"),
         "o_orderkey",

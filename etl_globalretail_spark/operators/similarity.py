@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 from etl_globalretail_spark.sources.artifacts import materialize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1043,7 +1043,7 @@ def _register_q136() -> None:
         their shingle sets — |pairs| work, not corpus work.
         """
         emb_pairs = QUERIES["q33_embedding_neardup"](spark, sf_dir)
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         sh = d.select(
             "doc_id", word_shingles(F.col("text"), 2).alias("s")
         )
@@ -2296,7 +2296,7 @@ def _register_q311() -> None:
         """Per-anchor top-K wrong-label cosine neighbors among the
         anchor's sign-LSH bucket — q293's scale tier; see block comment.
         """
-        e = load_table(spark, "embeddings", sf_dir)
+        e = load_table_spread(spark, "embeddings", sf_dir)
         vd = F.col("embedding").cast("array<double>")
         # One pass computes bucket + norm beside the vector; consumed by
         # BOTH join legs below — persist or the scan+bucket folds run
@@ -2624,7 +2624,7 @@ def _register_q318() -> None:
         anchor's sign-LSH bucket AND all its Hamming-1 neighbor buckets
         (multi-probe); each pick carries its probe distance. See block
         comment."""
-        e = load_table(spark, "embeddings", sf_dir)
+        e = load_table_spread(spark, "embeddings", sf_dir)
         vd = F.col("embedding").cast("array<double>")
         # One pass computes bucket + norm beside the vector; consumed by
         # BOTH join legs — persist or the scan+bucket folds run twice

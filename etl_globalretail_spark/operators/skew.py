@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from etl_globalretail_spark.operators.ranks import global_topk
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -334,7 +334,7 @@ def _register_q281() -> None:
         surviving 7: per-node stayed/moved-in census. The HRW invariant
         (every moved doc came from the dead node) is visible in the
         output: n_moved_in == n_from_dead on every row."""
-        d = load_table(spark, "documents", sf_dir).select("doc_id")
+        d = load_table_spread(spark, "documents", sf_dir).select("doc_id")
         survivors = tuple(n for n in _HRW_NODES if n != _HRW_DEAD)
         routed = rendezvous_assign(
             rendezvous_assign(d, "doc_id", _HRW_NODES, "before_node"),

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_globalretail_spark.plans.queries import make_query_decorator
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -262,7 +262,7 @@ def q21_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed priority order for ties (first language in LANG_STOPWORDS wins),
     'und' when no profile hits. Output is the confusion matrix against the
     stored lang label. Integer scores → deterministic decision."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     scored = d.select(
         "doc_id",
         F.col("lang").alias("lang_label"),
@@ -664,7 +664,7 @@ def q121_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFram
     """
     from etl_globalretail_spark.operators.ranks import global_row_number
 
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     tok = tokens(F.col("text"))
     feat = d.select(
         "doc_id",
@@ -869,7 +869,7 @@ def q340_markup_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source census of the boilerplate-removal chain over synthetic
     markup: html size, extracted size, exact round-trip count, content
     ratio. See block comment."""
-    d = load_table(spark, "documents", sf_dir)
+    d = load_table_spread(spark, "documents", sf_dir)
     html = F.concat(
         F.lit("<html><head><title>"), F.col("source"),
         F.lit('</title><script>var k="'), F.md5(F.encode("text", "UTF-8")),
@@ -1105,7 +1105,7 @@ def _register_q388() -> None:
         """Nominal Krippendorff's alpha over a 3-annotator panel with
         genuine missingness, via the exact half-unit coincidence
         matrix. See block comment."""
-        d = load_table(spark, "documents", sf_dir)
+        d = load_table_spread(spark, "documents", sf_dir)
         scored = d.select(
             "doc_id",
             F.col("lang").alias("lang_label"),

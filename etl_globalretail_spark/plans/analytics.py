@@ -32,7 +32,7 @@ from etl_globalretail_spark.plans.queries import (
     _osum,
 )
 from etl_globalretail_spark.sources.artifacts import materialize, session_artifact
-from etl_globalretail_spark.sources.readers import load_table
+from etl_globalretail_spark.sources.readers import load_table, load_table_spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -856,7 +856,7 @@ def q98_trailing_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the single-window form — the unchanged oracle
     hash-checks exactly that.
     """
-    e = load_table(spark, "events", sf_dir)
+    e = load_table_spread(spark, "events", sf_dir)
     hour_us, day_us = 3_600_000_000, 86_400_000_000
     us = F.unix_micros("ts")
     # base feeds BOTH union legs (native + ghosts): without a persist
@@ -8625,7 +8625,7 @@ def _register_q360() -> None:
         """32 Poisson-bootstrap replicate means of purchase value
         (milli-cents) plus the replicate = -1 point estimate. See
         block comment."""
-        e = load_table(spark, "events", sf_dir)
+        e = load_table_spread(spark, "events", sf_dir)
         p = e.filter(F.col("event_type") == "purchase").select(
             "event_id",
             F.expr(

@@ -19,6 +19,7 @@ column so a 1000-executor cluster reads in parallel) but is untested here
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +46,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _PLAN_CACHE = _STORE
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 
 def table_rows(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
@@ -53,10 +55,8 @@ def table_rows(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     knobs (e.g. streaming state partitions) without repaying the count per
     query. Paths pyarrow cannot open fall back to a counting job."""
     def build() -> int:
-        try:
-            return parquet_footer(f"{sf_dir}/{name}.parquet")[1]
-        except (OSError, pa.ArrowException):
-            return load_table(spark, name, sf_dir).count()
+        footer = read_footer(f"{sf_dir}/{name}.parquet")
+        return footer.rows if footer else load_table(spark, name, sf_dir).count()
 
     return session_artifact(spark, ("rows", name), sf_dir, build)
 
@@ -82,9 +82,29 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return session_artifact(spark, name, sf_dir, lambda: _scan(spark, name, sf_dir))
 
 
-def _scan(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
+def load_table_spread(
+    spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR
+) -> DataFrame:
+    """``load_table`` for a consumer whose cost is per row, not per byte
+    (shingling, span hashing, pairwise set similarity, Python kernels).
+
+    Spark sizes a scan's splits by bytes, so a small table is read by one
+    task however expensive each row is above it. This scan is repartitioned
+    to ``defaultParallelism`` whenever it would read on fewer tasks than
+    that (``_spread``); a table already read by that many tasks, as at any
+    real corpus size, is scanned as it is.
+    """
+    if name not in TESTDATA_SCHEMAS:
+        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    return session_artifact(
+        spark, ("spread", name), sf_dir, lambda: _scan(spark, name, sf_dir, per_row=True)
+    )
+
+
+def _scan(spark: SparkSession, name: str, sf_dir: str, per_row: bool = False) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    schema = read_schema(spark, name, path)
+    footer = read_footer(path)
+    schema = read_schema(spark, name, path, footer) if footer else None
     if schema is None:
         df = infer_read(spark, name, path)
     else:
@@ -92,17 +112,27 @@ def _scan(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     df = df.select(*TESTDATA_SCHEMAS[name].fieldNames())
     if name == "events":
         df = event_ts_micros(df, (schema or df.schema)["ts"].dataType)
-    if name not in _SPREAD_EXEMPT:
-        df = _spread(spark, df, path)
+    if footer:
+        df = _spread(spark, df, footer, per_row)
     return df
 
 
-def parquet_footer(path: str) -> tuple[pa.Schema, int]:
-    """Arrow schema and row count of a parquet table, from its footers.
+class Footer(NamedTuple):
+    """What the footers of a parquet table say about it (``parquet_footer``)."""
+
+    schema: pa.Schema
+    rows: int
+    row_groups: int
+    bytes: int
+
+
+def parquet_footer(path: str) -> Footer:
+    """Arrow schema, row count, row-group count and file bytes of a parquet
+    table, from its footers and file sizes.
 
     ``path`` is one file or a directory of part files (walked as Spark
     lists it: names starting with ``_`` or ``.`` are skipped). The schema
-    is the first part file's; the count sums every file's footer. INT96
+    is the first part file's; the counts and bytes sum every file. INT96
     columns come back as ``timestamp[us, tz=UTC]``: they hold instants and
     Spark reads them as TIMESTAMP, while pyarrow would type them zone-less
     nanoseconds, the same as TIMESTAMP(NANOS). Raises ``OSError`` (or a
@@ -120,35 +150,53 @@ def parquet_footer(path: str) -> tuple[pa.Schema, int]:
         if col.physical_type == "INT96" and col.path in schema.names:
             idx = schema.get_field_index(col.path)
             schema = schema.set(idx, schema.field(idx).with_type(pa.timestamp("us", "UTC")))
-    return schema, sum(m.num_rows for m in metas)
+    return Footer(
+        schema,
+        sum(m.num_rows for m in metas),
+        sum(m.num_row_groups for m in metas),
+        sum(os.path.getsize(f) for f in files),
+    )
 
 
-def read_schema(spark: SparkSession, name: str, path: str) -> T.StructType | None:
-    """The schema to read testdata table ``name`` at ``path`` with.
+def read_footer(path: str) -> Footer | None:
+    """``parquet_footer(path)``, or ``None`` when pyarrow cannot read it."""
+    try:
+        return parquet_footer(path)
+    except (OSError, pa.ArrowException):
+        return None
+
+
+def read_schema(
+    spark: SparkSession, name: str, path: str, footer: Footer
+) -> T.StructType | None:
+    """The schema to read testdata table ``name`` at ``path`` with, given
+    ``footer``, its ``parquet_footer``.
 
     It is ``TESTDATA_SCHEMAS[name]`` with the footer deciding each
     timestamp column's type, so the result is what Spark's inference
     gives: TIMESTAMP when the footer marks the column isAdjustedToUTC (or
-    stores INT96), TIMESTAMP_NTZ when it does not. Events ``ts`` stored as
-    TIMESTAMP(NANOS) is declared ``long``, and only then is Spark's
-    nanos-as-long conf set on the session. Any other column whose footer
-    type differs from the declaration raises ``ValueError``.
+    stores INT96), or when it does not and the session sets
+    ``spark.sql.parquet.inferTimestampNTZ.enabled=false``; TIMESTAMP_NTZ
+    otherwise. Events ``ts`` stored as TIMESTAMP(NANOS) is declared
+    ``long``, and only then is Spark's nanos-as-long conf set on the
+    session. Any other column whose footer type differs from the
+    declaration raises ``ValueError``.
 
-    Returns ``None`` when pyarrow cannot open the path, or when a declared
-    column is not in the footer (a partition column held in the directory
-    names, or a missing one); the caller then infers the schema as Spark
-    does, which resolves the former and fails loudly on the latter.
+    Returns ``None`` when a declared column is not in the footer (a
+    partition column held in the directory names, or a missing one); the
+    caller then infers the schema as Spark does, which resolves the former
+    and fails loudly on the latter.
     """
-    try:
-        footer = {f.name: f.type for f in parquet_footer(path)[0]}
-    except (OSError, pa.ArrowException):
-        return None
+    stored_types = {f.name: f.type for f in footer.schema}
     fields, nanos = [], False
     for field in TESTDATA_SCHEMAS[name].fields:
-        stored = footer.get(field.name)
+        stored = stored_types.get(field.name)
         if stored is None:
             return None
         actual = _spark_type(stored)
+        if isinstance(actual, T.TimestampNTZType) \
+                and str(spark.conf.get(_INFER_NTZ, "true")).lower() == "false":
+            actual = T.TimestampType()
         if (name, field.name) == ("events", "ts") and pa.types.is_timestamp(stored) \
                 and stored.unit == "ns":
             nanos, actual = True, T.LongType()
@@ -180,8 +228,8 @@ def _spark_type(stored: pa.DataType) -> T.DataType | None:
 
 
 def infer_read(spark: SparkSession, name: str, path: str) -> DataFrame:
-    """Spark's schema-inference read (one job), for paths ``read_schema``
-    cannot use. Events may be TIMESTAMP(NANOS), which inference rejects
+    """Spark's schema-inference read (one job), for paths whose footer
+    pyarrow cannot read or ``read_schema`` cannot use. Events may be TIMESTAMP(NANOS), which inference rejects
     unless nanos are read as longs."""
     if name == "events":
         spark.conf.set(_NANOS_AS_LONG, "true")
@@ -197,44 +245,30 @@ def event_ts_micros(df: DataFrame, ts_type: T.DataType) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-# Broadcast-bound micro-dimensions (≤25 rows): fanning them out just inserts
-# an exchange below the BroadcastExchange for nothing.
-_SPREAD_EXEMPT = frozenset({"region", "nation"})
+def _spread(spark: SparkSession, df: DataFrame, footer: Footer, per_row: bool) -> DataFrame:
+    """Round-robin a scan to ``defaultParallelism`` only when it reads on
+    fewer tasks than its consumer needs.
 
-
-def _spread(spark: SparkSession, df: DataFrame, path: str | None = None) -> DataFrame:
-    """Fan a narrow scan out to the cluster's parallelism.
-
-    The testdata ships each table as ONE single-row-group parquet file, so
-    the scan is one partition and every pre-shuffle map expression runs on
-    one core — tokenization/shingling over documents was measured 30× slower
-    than the same plan spread over local[32]. A round-robin repartition costs
-    one exchange of a ≤11 MB table here; on a real corpus the scan already
-    has thousands of splits and this is a no-op (guarded, not unconditional).
-    Filters and column pruning still push into the scan below the exchange.
-
-    The split count is estimated from the file size with Spark's own
-    packing formula (maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, size / defaultParallelism))) — a 7 µs os.stat
-    instead of ``df.rdd.getNumPartitions()``, whose DataFrame→RDD
-    conversion plans the scan and was measured at ~180 ms PER TABLE LOAD
-    (load_table runs 1–6× per query; across the bench that probe alone
-    was seconds of driver time). Non-local paths fall back to the probe.
+    Spark packs a file scan into splits of ``maxSplitBytes = min(
+    maxPartitionBytes, max(openCostInBytes, bytes / defaultParallelism))``,
+    and a parquet split reads only the row groups whose midpoint falls in
+    it, so the scan reads on ``min(row groups, splits)`` tasks. A
+    ``load_table`` consumer needs the splits Spark planned for the bytes:
+    the scan spreads only when its row groups are fewer (one 10.8 MB row
+    group planned as 3 splits). A table of at most ``openCostInBytes``
+    plans one split, and an input with at least as many row groups as
+    splits is already spread by the scan, so both keep Spark's plan. A
+    ``load_table_spread`` consumer (``per_row``) needs ``defaultParallelism``
+    tasks, whatever the bytes. The repartition costs one exchange, a Spark
+    job of its own under AQE; filters and column pruning push into the
+    scan below it either way.
     """
     want = spark.sparkContext.defaultParallelism
-    splits: int | None = None
-    if path is not None:
-        try:
-            size = os.path.getsize(path)
-            mpb = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-            open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-            max_split = min(mpb, max(open_cost, size // max(want, 1)))
-            splits = max(1, -(-size // max(max_split, 1)))
-        except OSError:
-            splits = None
-    if splits is None:
-        splits = df.rdd.getNumPartitions()
-    if splits < min(want, 8):
+    mpb = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
+    max_split = max(1, min(mpb, max(open_cost, footer.bytes // max(want, 1))))
+    splits = -(-footer.bytes // max_split)
+    if min(footer.row_groups, splits) < (want if per_row else splits):
         return df.repartition(want)
     return df
 
@@ -385,4 +419,4 @@ def fast_count(sf_dir: str, table: str) -> int:
     files' footers (``parquet_footer``); correctness is pinned against the
     scan-based count in pytest.
     """
-    return parquet_footer(os.path.join(sf_dir, f"{table}.parquet"))[1]
+    return parquet_footer(os.path.join(sf_dir, f"{table}.parquet")).rows

@@ -112,9 +112,12 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     the batch reader does. A path whose footer pyarrow cannot read (e.g. a
     directory no file has arrived in yet) falls back to Spark's inference.
     """
-    schema = read_schema(spark, "events", path) or infer_read(
-        spark, "events", path
-    ).select(*TESTDATA_SCHEMAS["events"].fieldNames()).schema
+    footer = read_footer(path)
+    schema = read_schema(spark, "events", path, footer) if footer else None
+    if schema is None:
+        schema = infer_read(spark, "events", path).select(
+            *TESTDATA_SCHEMAS["events"].fieldNames()
+        ).schema
     reader = spark.readStream.schema(schema).format("parquet")
     # Two on-disk layouts: the testdata ships events.parquet as a SINGLE
     # FILE (stream the parent dir with a glob selecting it — a file is
@@ -223,6 +226,7 @@ from etl_globalretail_spark.sources.readers import (  # noqa: E402
     event_ts_micros,
     infer_read,
     load_table,
+    read_footer,
     read_schema,
     table_rows,
 )

@@ -1,6 +1,6 @@
 """Parquet metadata from footers: declared-schema ``load_table``, footer
 row counts and stream schemas, with no Spark job and no change to what
-schema inference would give."""
+schema inference would give; and the footer-sized scan spread."""
 
 from __future__ import annotations
 
@@ -15,12 +15,16 @@ import pytest
 
 from etl_globalretail_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from etl_globalretail_spark.sources.readers import (
+    infer_read,
     load_table,
+    load_table_spread,
     parquet_footer,
     table_rows,
 )
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 def _next_job_id(spark) -> int:
@@ -112,13 +116,13 @@ def test_footer_type_mismatch_is_loud(spark, sf_dir, tmp_path):
         assert word in msg, msg
 
 
-def _with_conf(spark, value):
-    """Set (or unset, for None) the nanos-as-long conf; return the prior."""
-    prior = spark.conf.get(NANOS_AS_LONG, None)
+def _with_conf(spark, value, key=NANOS_AS_LONG):
+    """Set (or unset, for None) ``key``; return its prior value."""
+    prior = spark.conf.get(key, None)
     if value is None:
-        spark.conf.unset(NANOS_AS_LONG)
+        spark.conf.unset(key)
     else:
-        spark.conf.set(NANOS_AS_LONG, value)
+        spark.conf.set(key, value)
     return prior
 
 
@@ -155,6 +159,87 @@ def test_nanos_events_read_as_truncated_micros(spark, sf_dir, tmp_path):
         assert _rows(got) == _rows(load_table(spark, "events", sf_dir))
     finally:
         _with_conf(spark, prior)
+
+
+def test_infer_ntz_off_reads_as_inference(spark, sf_dir, tmp_path):
+    fresh = _copy(sf_dir, tmp_path, ("orders",))
+    prior = _with_conf(spark, "false", INFER_NTZ)
+    try:
+        got = load_table(spark, "orders", fresh)
+        want = infer_read(spark, "orders", f"{fresh}/orders.parquet").select(
+            *TESTDATA_SCHEMAS["orders"].fieldNames())
+        assert got.schema["o_orderdate"].dataType.simpleString() == "timestamp"
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+    finally:
+        _with_conf(spark, prior, INFER_NTZ)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spreads(df) -> bool:
+    return "RoundRobinPartitioning" in _plan(df)
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_single_split_scan_keeps_spark_plan(spark, sf_dir, tmp_path, name):
+    fresh = _copy(sf_dir, tmp_path, (name,))
+    assert not _spreads(load_table(spark, name, fresh))
+
+
+def test_spread_only_when_row_groups_limit_splits(spark, sf_dir, tmp_path):
+    t = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    one, many = tmp_path / "one", tmp_path / "many"
+    _copy(sf_dir, one, ("lineitem",))
+    want = spark.sparkContext.defaultParallelism
+    prior = _with_conf(spark, str(os.path.getsize(f"{one}/lineitem.parquet") // 8),
+                       OPEN_COST)
+    try:
+        splits = spark.read.parquet(f"{one}/lineitem.parquet").rdd.getNumPartitions()
+        assert pq.read_metadata(f"{one}/lineitem.parquet").num_row_groups == 1 < splits
+        df = load_table(spark, "lineitem", str(one))
+        assert f"RoundRobinPartitioning({want})" in _plan(df)
+
+        os.makedirs(many)
+        pq.write_table(t, f"{many}/lineitem.parquet",
+                       row_group_size=-(-t.num_rows // (4 * want)))
+        splits = spark.read.parquet(f"{many}/lineitem.parquet").rdd.getNumPartitions()
+        assert pq.read_metadata(f"{many}/lineitem.parquet").num_row_groups >= splits
+        df = load_table(spark, "lineitem", str(many))
+        assert not _spreads(df)
+        assert _rows(df) == _rows(load_table(spark, "lineitem", str(one)))
+    finally:
+        _with_conf(spark, prior, OPEN_COST)
+
+
+def test_per_row_scan_reads_on_every_core(spark, sf_dir, tmp_path):
+    want = spark.sparkContext.defaultParallelism
+    small = _copy(sf_dir, tmp_path / "small", ("documents",))
+    df = load_table_spread(spark, "documents", small)
+    assert f"RoundRobinPartitioning({want})" in _plan(df)
+    assert not _spreads(load_table(spark, "documents", small))
+    assert _rows(df) == _rows(load_table(spark, "documents", small))
+
+    t = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    os.makedirs(tmp_path / "many")
+    path = f"{tmp_path}/many/lineitem.parquet"
+    pq.write_table(t, path, row_group_size=-(-t.num_rows // (4 * want)))
+    prior = _with_conf(spark, str(os.path.getsize(path) // (2 * want)), OPEN_COST)
+    try:
+        assert spark.read.parquet(path).rdd.getNumPartitions() >= want
+        assert not _spreads(load_table_spread(spark, "lineitem", f"{tmp_path}/many"))
+    finally:
+        _with_conf(spark, prior, OPEN_COST)
+
+
+def test_spark_written_directory_keeps_spark_plan(spark, sf_dir, tmp_path):
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(2) \
+        .write.parquet(f"{tmp_path}/lineitem.parquet")
+    df = load_table(spark, "lineitem", str(tmp_path))
+    assert not _spreads(df)
+    assert df.count() == pq.read_metadata(f"{sf_dir}/lineitem.parquet").num_rows
 
 
 def test_registry_holds_every_family():

@@ -80,7 +80,8 @@ def test_stratified_sample_nests_and_respects_strata(spark, sf_dir):
     assert lo.filter(F.col("lang") == "fr").count() == 0  # default 0.0
 
     # map-only: no exchange beyond what the bare reader already has
-    # (load_table's round-robin spread of the single-file testdata scan)
+    # (none here: load_table spreads a scan only when its row groups are
+    # fewer than the splits Spark plans for its bytes)
     def n_exchanges(df):
         plan = (
             df._jdf.queryExecution().executedPlan().toString()
